@@ -33,10 +33,10 @@ from typing import Callable, Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from engine import synth
+from engine import checks, synth
 
 SNR_DB_MIN = 30.0
 
@@ -765,6 +765,7 @@ def audio_invariants(
     expected_fn: Callable[[str, int, int], np.ndarray] = _default_expected,
     snr_min_db: float = SNR_DB_MIN,
     broadcast_dim: bool = False,
+    bucket: Column | None = None,
 ) -> DataFrame:
     """Per-clip invariant results: pcm_ok (decode + SNR>=min), transcript_ok,
     bytes_null (folded in here so the fused stats scan never has to
@@ -775,6 +776,11 @@ def audio_invariants(
     (sort-merge or shuffled-hash on clip_id; co-located if both tables are
     bucketed by clip_id). Pass ``broadcast_dim=True`` only for genuinely small
     dims. Violations are ``~pcm_ok | ~transcript_ok``.
+
+    ``bucket`` is the verdict bucket expression (``checks.bucket_expr``),
+    evaluated over ``clips``; ``checks.run_suite`` passes the suite's own.
+    Without it the rows carry ``run_suite``'s default bucketing of
+    ``clip_id``.
     """
     # CRITICAL scale invariant: the binary column NEVER enters a join. The
     # transcripts dim is fact-sized at 10^12 rows, so joining it to clips
@@ -783,14 +789,15 @@ def audio_invariants(
     #   (1) decode/SNR runs on the bare clips scan (no join),
     #   (2) transcript equality is a pruned-column join (clip_id, transcript),
     #   (3) the two SMALL result sets join on clip_id at the end.
-    bucket = F.pmod(F.xxhash64("clip_id"), F.lit(32)).cast("int").alias("bucket_id")
+    if bucket is None:
+        bucket = checks.bucket_expr(["clip_id"], 32)
     # every codec's validation now reads the WHOLE payload (real flac decode;
     # full Ogg page-chain CRCs; full MP3 frame-chain walk), so the r2
     # header-window byte pruning no longer applies to any codec and was
     # removed — the full binary column crosses the JVM->Python Arrow pipe
     # once, in the one pass that exists to read it.
     pcm_in = clips.select(
-        "clip_id", bucket, "bytes", "sr_hz", "dur_ms", "codec"
+        "clip_id", bucket.alias(checks.BUCKET), "bytes", "sr_hz", "dur_ms", "codec"
     )
 
     dim = transcripts.select("clip_id", "transcript_gold")
@@ -861,21 +868,11 @@ def invariant_batches(batches, expected_fn, snr_min_db):
         if prep is not None:
             try:
                 row_expected = prep(clip_ids, srs, durs, codecs)
-            except TypeError:
-                try:
-                    row_expected = prep(clip_ids, srs, durs)  # pre-r6 seam
-                except Exception:
-                    row_expected = None
             except Exception:
                 row_expected = None  # e.g. unparseable ids -> per-row path
         if row_expected is None:
             def row_expected(j):
-                try:
-                    return expected_fn(
-                        clip_ids[j], int(srs[j]), int(durs[j]), codecs[j]
-                    )
-                except TypeError:  # pre-r6 three-arg expected_fn
-                    return expected_fn(clip_ids[j], int(srs[j]), int(durs[j]))
+                return expected_fn(clip_ids[j], int(srs[j]), int(durs[j]), codecs[j])
 
         bytes_null = np.zeros(n, dtype=bool)
         pcm_ok = np.zeros(n, dtype=bool)

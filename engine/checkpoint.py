@@ -12,8 +12,12 @@ latest-by-timestamp resolution (``utils.py:226-230``). Generalized here:
   * each completed shard appends (run_id, shard_id, constraint, counts,
     secs, updated_at) rows to a checkpoint table — idempotent append keyed by
     (run_id, shard_id);
+  * each shard is one ``checks.run_suite`` call — the same suite compiler as
+    a batch ``validate``, payload checks included — whose cached frames are
+    released before the next shard;
   * resume = read done shard ids for the run_id, skip them, process the rest;
-  * final verdicts = sum over shard rows — equal to an uninterrupted run.
+  * final verdicts = ``checks.rollup_verdicts`` over shard rows — equal to an
+    uninterrupted run.
 
 The checkpoint table is an Iceberg-SHAPED snapshot table (engine/snapshots.py:
 per-append manifests + time travel — this image has no Iceberg jars, the
@@ -223,26 +227,26 @@ class CheckpointedRunner:
                 continue
             t0 = time.time()
             shard = sharded.filter(F.col("__shard") == s).drop("__shard")
-            res = checks.run_suite(
+            with checks.run_suite(
                 shard, suite, key_cols=key_cols, refs=refs or {},
                 n_buckets=1, stat_columns=stat_columns or [],
-            )
-            verdicts = res.verdicts.collect()
-            if not verdicts:
-                # an EMPTY shard produces no verdict rows at all; record
-                # explicit zero-rows for every constraint so the shard is
-                # marked done (otherwise a resume would re-run it forever)
-                verdicts = [
-                    dict(constraint=c.name, violation_count=0, rows_scanned=0,
-                         passed=True)
-                    for c in suite.constraints
-                ]
-            now = pd.Timestamp.utcnow().tz_localize(None)
-            if stat_columns:
-                # stats commit BEFORE the 'done' verdict rows: a crash in
-                # between re-runs the shard, whose deterministic partials
-                # dedupe at read time (stats()/shard_stats()).
-                self._append_shard_stats(run_id, s, res, shard, stat_columns, now)
+            ) as res:
+                verdicts = res.verdicts.collect()
+                if not verdicts:
+                    # an EMPTY shard produces no verdict rows at all; record
+                    # explicit zero-rows for every constraint so the shard is
+                    # marked done (otherwise a resume would re-run it forever)
+                    verdicts = [
+                        dict(constraint=c.name, violation_count=0, rows_scanned=0,
+                             passed=True)
+                        for c in suite.constraints
+                    ]
+                now = pd.Timestamp.utcnow().tz_localize(None)
+                if stat_columns:
+                    # stats commit BEFORE the 'done' verdict rows: a crash in
+                    # between re-runs the shard, whose deterministic partials
+                    # dedupe at read time (stats()/shard_stats()).
+                    self._append_shard_stats(run_id, s, res, shard, stat_columns, now)
             secs = time.time() - t0
             self._append(
                 [
@@ -264,42 +268,19 @@ class CheckpointedRunner:
         """Global verdicts summed from shard rows. Pass the suite so NotNull
         max_null_rate tolerances apply exactly as in an uninterrupted
         checks.run_suite run; without it every constraint requires 0."""
-        df = self._read()
-        ck = df.filter((F.col("run_id") == run_id) & (F.col("status") == "done"))
-        passed = (
-            checks.suite_passed_expr(suite)
-            if suite is not None
-            else (F.col("violation_count") == 0)
-        )
-        return (
-            ck.groupBy("constraint")
-            .agg(
-                F.sum("violation_count").cast("long").alias("violation_count"),
-                F.sum("rows_scanned").cast("long").alias("rows_scanned"),
-            )
-            .withColumn("passed", passed)
-        )
+        return self._rollup(self._read(), run_id, suite)
 
     def verdicts_at(
         self, run_id: str, snapshot_id: int, suite: ConstraintSuite | None = None
     ) -> DataFrame:
-        """Time travel: the merged verdicts as of checkpoint snapshot
+        """Time travel: ``verdicts`` as of checkpoint snapshot
         ``snapshot_id`` — what the run knew after that shard committed."""
-        df = self.table.time_travel(snapshot_id)
-        ck = df.filter((F.col("run_id") == run_id) & (F.col("status") == "done"))
-        passed = (
-            checks.suite_passed_expr(suite)
-            if suite is not None
-            else (F.col("violation_count") == 0)
-        )
-        return (
-            ck.groupBy("constraint")
-            .agg(
-                F.sum("violation_count").cast("long").alias("violation_count"),
-                F.sum("rows_scanned").cast("long").alias("rows_scanned"),
-            )
-            .withColumn("passed", passed)
-        )
+        return self._rollup(self.table.time_travel(snapshot_id), run_id, suite)
+
+    @staticmethod
+    def _rollup(df: DataFrame, run_id: str, suite: ConstraintSuite | None) -> DataFrame:
+        done = df.filter((F.col("run_id") == run_id) & (F.col("status") == "done"))
+        return checks.rollup_verdicts(done, suite)
 
     def lineage(self, run_id: str) -> DataFrame:
         """Per-shard lineage: status, metrics, timing."""

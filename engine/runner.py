@@ -1,15 +1,18 @@
-"""validate() orchestration + spark-submit CLI entry.
+"""validate() + spark-submit CLI entry.
 
-One call = the full constraint-suite pass over a clips table:
+One call = the full constraint-suite pass over a clips table, compiled by
+``checks.run_suite`` (the one suite compiler):
 
-  1. fused row-local checks + column stats (one scan)      engine/checks.py
-  2. uniqueness shuffle agg                                engine/checks.py
-  3. referential-integrity anti-join                       engine/checks.py
-  4. audio/transcript Arrow-UDF invariant pass             engine/audio.py
+  1. fused row-local checks + column stats (one scan)
+  2. uniqueness shuffle agg
+  3. referential-integrity anti-join
+  4. with ``check_audio=True``: the audio/transcript payload checks
+     (``suite.payload_checks``) as one Arrow-UDF decode pass (engine/audio.py)
 
 returning (verdicts, partition_verdicts, violations, stats) — the reference's
 pass/fail + violation-positions contract (anomaly_detection.py:462-465)
-generalized. Checkpoint-resumable variant lives in engine/checkpoint.py.
+generalized. The resumable runner (engine/checkpoint.py) and the streaming
+front-end (engine/streaming.py) run the same compiler per shard / micro-batch.
 
 CLI:  spark-submit --py-files engine.zip -m engine.runner <clips_path> <transcripts_path>
 """
@@ -17,11 +20,9 @@ CLI:  spark-submit --py-files engine.zip -m engine.runner <clips_path> <transcri
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from engine import audio as audio_mod
 from engine import checks as checks_mod
-from engine.suite import ConstraintSuite, NotNull, audio_clip_suite
+from engine.suite import ConstraintSuite, audio_clip_suite, with_payload_checks
 
 
 def validate(
@@ -32,115 +33,22 @@ def validate(
     check_audio: bool = False,
     stat_columns: list[str] | None = None,
 ) -> checks_mod.SuiteResult:
-    if check_audio and transcripts is None:
-        # silently skipping the requested audio pass would report clean
-        # verdicts the caller never computed — same guard as the streaming
-        # entry point (streaming.py; ADVICE r5: fixed in only one of two)
-        raise ValueError("check_audio=True requires a transcripts DataFrame")
     suite = suite or audio_clip_suite()
-    refs = {"transcripts": transcripts} if transcripts is not None else {}
-    stat_columns = stat_columns or [c for c in clips.columns if c != "bytes"]
-
-    # when the audio pass runs, it is the ONLY pass that decompresses the
-    # binary column: bytes-null checks are folded into it instead of forcing
-    # the fused stats scan to read bytes too
-    fused_suite = suite
-    bytes_nn = [
-        c for c in suite.of_type(NotNull) if getattr(c, "column", None) == "bytes"
-    ] if (check_audio and transcripts is not None) else []
-    if bytes_nn:
-        fused_suite = ConstraintSuite(
-            [c for c in suite.constraints if c not in bytes_nn]
-        )
-
-    result = checks_mod.run_suite(
+    if check_audio:
+        if transcripts is None:
+            # silently skipping the requested audio pass would report clean
+            # verdicts the caller never computed — same guard as the
+            # streaming entry point
+            raise ValueError("check_audio=True requires a transcripts DataFrame")
+        suite = with_payload_checks(suite)
+    return checks_mod.run_suite(
         clips,
-        fused_suite,
+        suite,
         key_cols=["clip_id"],
-        refs=refs,
+        refs={"transcripts": transcripts} if transcripts is not None else {},
         n_buckets=n_buckets,
-        stat_columns=stat_columns,
+        stat_columns=stat_columns or [c for c in clips.columns if c != "bytes"],
     )
-
-    if check_audio and transcripts is not None:
-        inv = audio_mod.audio_invariants(clips, transcripts).cache()
-        audio_checks = [
-            ("pcm_ok", "pcm_snr_invariant"),
-            ("transcript_ok", "transcript_equality"),
-            ("meta_sr_ok", "container_sr_consistency"),
-        ]
-        if bytes_nn:
-            inv = inv.withColumn("bytes_ok", ~F.col("bytes_null"))
-            audio_checks.append(("bytes_ok", bytes_nn[0].name))
-        # per-flag violation ROWS stay one lazy filter each; the per-bucket
-        # verdict counts for ALL flags come from ONE groupBy over the cached
-        # invariant table (r7: was one aggregate job + two union analyses per
-        # flag — 4x the scan of the cache and 4x the driver plan work)
-        for flag, name in audio_checks:
-            bad = inv.filter(~F.col(flag))
-            result.violations[name] = bad.select(
-                "clip_id",
-                F.lit(name).alias("constraint"),
-                F.coalesce(F.col("decode_error"), F.col("snr_db").cast("string")).alias(
-                    "offending_value"
-                ),
-                F.col("bucket_id"),
-            )
-        count_aggs = [
-            F.sum(F.when(~F.col(flag), 1).otherwise(0)).cast("long").alias(f"__c_{flag}")
-            for flag, _ in audio_checks
-        ] + [F.count(F.lit(1)).cast("long").alias("__rows")]
-        pb_wide = inv.groupBy("bucket_id").agg(*count_aggs)
-        vstructs = [
-            F.struct(
-                F.lit(name).alias("constraint"),
-                F.col(f"__c_{flag}").alias("violation_count"),
-            )
-            for flag, name in audio_checks
-        ]
-        per_bucket = pb_wide.select(
-            "bucket_id",
-            F.col("__rows").alias("rows_scanned"),
-            F.explode(F.array(*vstructs)).alias("v"),
-        ).select(
-            "bucket_id", "v.constraint", "v.violation_count", "rows_scanned"
-        ).withColumn("passed", F.col("violation_count") == 0)
-        result.partition_verdicts = result.partition_verdicts.unionByName(per_bucket)
-        result.verdicts = result.verdicts.unionByName(
-            per_bucket.groupBy("constraint").agg(
-                F.sum("violation_count").cast("long").alias("violation_count"),
-                F.sum("rows_scanned").cast("long").alias("rows_scanned"),
-            ).withColumn("passed", F.col("violation_count") == 0)
-        )
-
-    # one union of every violation source -> materializing the full violation
-    # set is ONE action (vs one job per constraint). Row-local constraints
-    # come from the fused violations_union scan; per-constraint DFs for them
-    # stay available in result.violations but are excluded here (double count).
-    row_local_names = {c.name for c in fused_suite.row_local()}
-    union_parts = []
-    if result.violations_union is not None:
-        union_parts.append(
-            result.violations_union.select(
-                "clip_id", "constraint", "offending_value", checks_mod.BUCKET
-            )
-        )
-    for name in list(result.violations.keys()):
-        if name in row_local_names:
-            # row-local rows come from the fused violations_union scan; skip
-            # WITHOUT touching the entry so its plan is never even built
-            # (checks.LazyFrames defers construction to first access)
-            continue
-        vdf = result.violations[name]
-        union_parts.append(
-            vdf.select("clip_id", "constraint", "offending_value", checks_mod.BUCKET)
-        )
-    if union_parts:
-        all_v = union_parts[0]
-        for p in union_parts[1:]:
-            all_v = all_v.unionByName(p)
-        result.all_violations = all_v
-    return result
 
 
 def main() -> None:  # pragma: no cover - CLI shim
@@ -191,10 +99,9 @@ def main() -> None:  # pragma: no cover - CLI shim
 
     if args.checkpoint:
         from engine.checkpoint import CheckpointedRunner
-        from engine.suite import audio_clip_suite
 
         runner = CheckpointedRunner(spark, args.checkpoint)
-        suite = audio_clip_suite()
+        suite = with_payload_checks(audio_clip_suite())
         stat_cols = args.stat_columns.split(",") if args.stat_columns else None
         v = runner.run(
             clips, suite, ["clip_id"], refs={"transcripts": transcripts},

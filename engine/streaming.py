@@ -5,9 +5,12 @@ carried across batches (``infinite_dataset.py:55-76``). The engine's primary
 answer is batch-incremental checkpointing (engine/checkpoint.py — SURVEY.md
 §2.10 records why: resumable shards beat long-lived streaming state at 10^12
 rows). This module adds the true-streaming variant for pipelines that ARE
-streams (e.g. clips landing continuously): the same row-local constraint
-expressions evaluated per micro-batch via ``foreachBatch``, verdicts appended
-to a checkpoint-style sink — state lives in the sink, not the stream.
+streams (e.g. clips landing continuously): each micro-batch is one
+``checks.run_suite`` call — the same suite compiler the batch and checkpoint
+entry points use — over the suite's row-local and payload checks, via
+``foreachBatch``. Its per-bucket verdict rows are appended to a
+checkpoint-style sink, so state lives in the sink, not the stream, and
+``cumulative_verdicts`` merges them with the shared ``checks.rollup_verdicts``.
 
 Row-local checks need no watermark (stateless per row). Windowed drift over
 event time (count/mean per tumbling window) is included as the stateful demo
@@ -20,7 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from engine import checks as checks_mod
-from engine.suite import ConstraintSuite
+from engine.suite import ConstraintSuite, PayloadCheck, with_payload_checks
 
 
 def stream_validate(
@@ -33,94 +36,46 @@ def stream_validate(
     transcripts: DataFrame | None = None,
     check_audio: bool = False,
 ):
-    """Attach the suite's row-local checks to a streaming DataFrame.
+    """Attach the suite's per-row checks to a streaming DataFrame.
 
-    Each micro-batch runs the SAME fused conditional-aggregation pass as the
-    batch engine (one scan of the batch) and appends per-bucket verdict rows
-    (+ batch_id) to ``out_path``. Returns the StreamingQuery. Cumulative
-    verdicts = groupBy(constraint).sum over the sink — exactly the
-    checkpoint-table merge semantics.
+    Each micro-batch runs ``checks.run_suite`` on the suite's row-local and
+    payload checks (Unique/RefIntegrity need global state and are left to
+    the batch entry points) and appends its per-bucket verdict rows (+ batch_id)
+    to ``out_path``. Returns the StreamingQuery. Cumulative verdicts =
+    ``cumulative_verdicts`` over the sink — exactly the checkpoint-table
+    merge semantics, because micro-batches partition the rows.
 
-    ``check_audio=True`` (r4) additionally runs the full audio/transcript
-    invariant pass (audio.audio_invariants — real PCM decode + SNR,
-    container-sr cross-field, transcript equality against the STATIC
-    ``transcripts`` dim; stream-static join semantics) per micro-batch and
-    appends its per-bucket verdicts to the same sink: streaming ingest of a
-    clip table gets the identical 10-constraint validation as a batch run,
-    and cumulative verdicts still merge by groupBy(constraint).sum because
-    micro-batches partition the rows."""
-    if check_audio and transcripts is None:
-        # silently skipping the requested audio pass would report clean
-        # verdicts the caller never computed (ADVICE r4)
-        raise ValueError("check_audio=True requires a transcripts DataFrame")
-    row_local = suite.row_local()
+    ``check_audio=True`` adds the payload checks (``suite.payload_checks``:
+    real PCM decode + SNR, container-sr cross-field, transcript equality
+    against the STATIC ``transcripts`` dim; stream-static join semantics), so
+    streaming ingest of a clip table gets the same per-row verdicts as a
+    batch ``validate(check_audio=True)``."""
+    if check_audio:
+        if transcripts is None:
+            # silently skipping the requested audio pass would report clean
+            # verdicts the caller never computed
+            raise ValueError("check_audio=True requires a transcripts DataFrame")
+        suite = with_payload_checks(suite)
+    per_row = ConstraintSuite(
+        [c for c in suite.constraints if c.row_local or isinstance(c, PayloadCheck)]
+    )
+    refs = {"transcripts": transcripts} if transcripts is not None else {}
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        fact = batch_df.withColumn(
-            checks_mod.BUCKET, checks_mod.bucket_expr(key_cols, n_buckets)
-        )
-        exprs = [F.count(F.lit(1)).cast("long").alias("rows_scanned")] + [
-            F.sum(F.when(checks_mod._violation_expr(c, fact), 1).otherwise(0))
-            .cast("long")
-            .alias(f"__v__{i}")
-            for i, c in enumerate(row_local)
-        ]
-        wide = fact.groupBy(checks_mod.BUCKET).agg(*exprs)
-        structs = [
-            F.struct(
-                F.lit(c.name).alias("constraint"),
-                F.col(f"__v__{i}").alias("violation_count"),
-            )
-            for i, c in enumerate(row_local)
-        ]
-        long = wide.select(
-            F.lit(batch_id).alias("batch_id"),
-            F.col(checks_mod.BUCKET),
-            "rows_scanned",
-            F.explode(F.array(*structs)).alias("v"),
-        ).select("batch_id", checks_mod.BUCKET, "v.constraint",
-                 "v.violation_count", "rows_scanned")
-        if check_audio and transcripts is not None:
-            from engine import audio as audio_mod
-
-            inv = audio_mod.audio_invariants(batch_df, transcripts)
-            flags = [
-                ("pcm_ok", "pcm_snr_invariant"),
-                ("transcript_ok", "transcript_equality"),
-                ("meta_sr_ok", "container_sr_consistency"),
-            ]
-            au_wide = inv.groupBy("bucket_id").agg(
-                F.count(F.lit(1)).cast("long").alias("rows_scanned"),
-                *[
-                    F.sum(F.when(~F.col(flag), 1).otherwise(0))
-                    .cast("long")
-                    .alias(f"__a__{i}")
-                    for i, (flag, _) in enumerate(flags)
-                ],
-            )
-            au_structs = [
-                F.struct(
-                    F.lit(name).alias("constraint"),
-                    F.col(f"__a__{i}").alias("violation_count"),
-                )
-                for i, (_, name) in enumerate(flags)
-            ]
-            au_long = au_wide.select(
-                F.lit(batch_id).alias("batch_id"),
-                F.col("bucket_id").alias(checks_mod.BUCKET),
-                "rows_scanned",
-                F.explode(F.array(*au_structs)).alias("v"),
-            ).select("batch_id", checks_mod.BUCKET, "v.constraint",
-                     "v.violation_count", "rows_scanned")
-            long = long.unionByName(au_long)
-        # idempotent sink: a retried micro-batch overwrites ITS OWN batch_id
-        # partition instead of appending a second copy (dynamic partition
-        # overwrite touches only partitions present in this write)
-        long.write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("batch_id").parquet(out_path)
+        with checks_mod.run_suite(
+            batch_df, per_row, key_cols, refs=refs, n_buckets=n_buckets,
+            stat_columns=[],
+        ) as res:
+            # idempotent sink: a retried micro-batch overwrites ITS OWN
+            # batch_id partition instead of appending a second copy (dynamic
+            # partition overwrite touches only partitions present in this write)
+            res.partition_verdicts.drop("passed").withColumn(
+                "batch_id", F.lit(batch_id)
+            ).write.mode("overwrite").option(
+                "partitionOverwriteMode", "dynamic"
+            ).partitionBy("batch_id").parquet(out_path)
 
     return (
         stream_df.writeStream.foreachBatch(process_batch)
@@ -130,8 +85,12 @@ def stream_validate(
     )
 
 
-def cumulative_verdicts(spark, out_path: str) -> DataFrame:
-    """Merge streamed per-batch verdict rows into global verdicts.
+def cumulative_verdicts(
+    spark, out_path: str, suite: ConstraintSuite | None = None
+) -> DataFrame:
+    """Merge streamed per-batch verdict rows into global verdicts. Pass the
+    suite so NotNull max_null_rate tolerances apply exactly as in a batch
+    run; without it every constraint requires 0 violations.
 
     (batch_id, bucket_id, constraint) is unique per successful batch write, so
     the dropDuplicates is a no-op on clean runs and absorbs duplicate rows if
@@ -139,14 +98,7 @@ def cumulative_verdicts(spark, out_path: str) -> DataFrame:
     df = spark.read.parquet(out_path).dropDuplicates(
         ["batch_id", checks_mod.BUCKET, "constraint"]
     )
-    return (
-        df.groupBy("constraint")
-        .agg(
-            F.sum("violation_count").cast("long").alias("violation_count"),
-            F.sum("rows_scanned").cast("long").alias("rows_scanned"),
-        )
-        .withColumn("passed", F.col("violation_count") == 0)
-    )
+    return checks_mod.rollup_verdicts(df, suite)
 
 
 def stateful_ewma_stream(

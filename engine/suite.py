@@ -16,7 +16,8 @@ Row-local constraints (NotNull / Range / Domain / RowInvariant) expose
 ``violation_expr`` — a boolean Column where True marks a violating row — so the
 whole set fuses into ONE conditional-aggregation pass over the fact table.
 Cross-row constraints (Unique, RefIntegrity) compile to a shuffle agg / an
-anti-join on pruned columns.
+anti-join on pruned columns. Payload constraints (PayloadCheck) compile to
+one Arrow-UDF decode pass over the binary column (engine/audio.py).
 """
 
 from __future__ import annotations
@@ -136,6 +137,27 @@ class RefIntegrity(Constraint):
     ref_columns: tuple = ()
 
 
+#: the per-clip boolean columns ``audio.audio_invariants`` emits
+PAYLOAD_FLAGS = ("pcm_ok", "transcript_ok", "meta_sr_ok")
+
+
+@dataclass(frozen=True)
+class PayloadCheck(Constraint):
+    """Per-clip payload invariant: a row violates it when ``flag`` — one of
+    the boolean columns of the audio decode pass (``PAYLOAD_FLAGS``) — is
+    False. ``ref_name`` names the run-time refs table holding the gold
+    transcripts. Every PayloadCheck of a suite compiles into the same single
+    decode pass, which also absorbs the suite's NotNull checks on
+    ``bytes``."""
+
+    flag: str = ""
+    ref_name: str = ""
+
+    def __post_init__(self):
+        if self.flag not in PAYLOAD_FLAGS:
+            raise ValueError(f"unknown payload flag: {self.flag!r}")
+
+
 @dataclass
 class ConstraintSuite:
     """An ordered, named collection of constraints over one fact table."""
@@ -182,6 +204,25 @@ def audio_clip_suite(
         )
     )
     return s
+
+
+def payload_checks() -> list[PayloadCheck]:
+    """The three audio/transcript invariants of the decode pass: decoded PCM
+    SNR, transcript equality against the ``transcripts`` ref table, and the
+    container-declared sample rate against ``sr_hz``."""
+    return [
+        PayloadCheck("pcm_snr_invariant", flag="pcm_ok", ref_name="transcripts"),
+        PayloadCheck("transcript_equality", flag="transcript_ok", ref_name="transcripts"),
+        PayloadCheck("container_sr_consistency", flag="meta_sr_ok", ref_name="transcripts"),
+    ]
+
+
+def with_payload_checks(suite: ConstraintSuite) -> ConstraintSuite:
+    """A copy of ``suite`` plus the payload checks it does not already hold."""
+    have = set(suite.names())
+    return ConstraintSuite(
+        list(suite.constraints) + [c for c in payload_checks() if c.name not in have]
+    )
 
 
 def speech_rate_invariant(

@@ -276,3 +276,55 @@ def test_shard_stats_with_empty_shards(spark, tmp_path):
     assert runner.shard_stats("tiny").select("shard_id").distinct().count() == 16
     merged = {r["metric"]: r["value"] for r in runner.stats("tiny").collect()}
     assert merged["count"] == 3.0 and merged["min"] == 0.0 and merged["max"] == 20.0
+
+
+@pytest.fixture(scope="module")
+def small_tables(spark):
+    clips = synth.gen_clips(spark, 1000, partitions=4).cache()
+    transcripts = synth.gen_transcripts(spark, 1000, partitions=2).cache()
+    clips.count(), transcripts.count()
+    yield clips, transcripts
+    clips.unpersist(), transcripts.unpersist()
+
+
+def test_payload_checks_match_validate_per_shard(spark, small_tables, tmp_path):
+    """The payload checks run through the same suite compiler in the
+    checkpoint runner: all 10 verdicts equal validate(check_audio=True), and
+    each shard's rows equal the matching bucket of a validate run with
+    n_buckets == n_shards (shards and buckets share one hash)."""
+    from engine.runner import validate
+    from engine.suite import with_payload_checks
+
+    clips, transcripts = small_tables
+    suite = with_payload_checks(audio_clip_suite())
+    runner = CheckpointedRunner(spark, str(tmp_path / "ckpt_payload"))
+    merged = runner.run(clips, suite, ["clip_id"],
+                        refs={"transcripts": transcripts}, run_id="p", n_shards=2)
+    shards = {
+        (r["shard_id"], r["constraint"]): (r["violation_count"], r["rows_scanned"])
+        for r in runner.table.read().filter("run_id = 'p'").collect()
+    }
+    with validate(clips, transcripts, check_audio=True, n_buckets=2) as res:
+        assert _verdict_map(merged) == _verdict_map(res.verdicts)
+        buckets = {
+            (r["bucket_id"], r["constraint"]): (r["violation_count"], r["rows_scanned"])
+            for r in res.partition_verdicts.collect()
+        }
+    assert len(_verdict_map(merged)) == 10
+    assert shards == buckets
+
+
+def test_run_releases_cached_frames(spark, small_tables, tmp_path):
+    """Every shard's run_suite result is closed: after a 2-shard run (row
+    checks, Unique, RefIntegrity and the payload pass all persist frames)
+    the session holds no more cached plans than before."""
+    from engine.suite import with_payload_checks
+
+    clips, transcripts = small_tables
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    before = cache.numCachedEntries()
+    CheckpointedRunner(spark, str(tmp_path / "ckpt_cache")).run(
+        clips, with_payload_checks(audio_clip_suite()), ["clip_id"],
+        refs={"transcripts": transcripts}, run_id="c", n_shards=2,
+    ).collect()
+    assert cache.numCachedEntries() == before

@@ -289,49 +289,89 @@ def test_windowed_drift_schema(spark):
     assert agg[0]["n"] == 2 and agg[0]["mean"] == 2.0
 
 
-@pytest.mark.slow
-def test_stream_validate_audio_matches_batch(spark, tmp_path):
-    """r4: check_audio=True streams the FULL invariant pass (real PCM
-    decode + SNR, container-sr, transcript equality vs the static dim) —
-    cumulative verdicts across micro-batches must equal a batch run,
-    including duplicated clip_ids split across micro-batches."""
-    from engine.runner import validate
-
-    n = 1000
-    clips = synth.gen_clips(spark, n, partitions=4).cache()
-    clips.count()
-    tr = synth.gen_transcripts(spark, n, partitions=2).cache()
-    tr.count()
+def _stream(spark, tmp_path, clips, suite, **kw):
+    """Run ``stream_validate`` over ``clips`` landing in two chunks (so
+    duplicated clip_ids can split across micro-batches); returns the sink."""
     src_dir = str(tmp_path / "landing")
     a, b = clips.randomSplit([0.5, 0.5], seed=7)
     a.write.mode("overwrite").parquet(src_dir)
-
     stream = (
         spark.readStream.schema(clips.schema)
         .option("maxFilesPerTrigger", "2")
         .parquet(src_dir)
     )
     out = str(tmp_path / "verdicts")
-    ckpt = str(tmp_path / "ckpt")
     q = streaming.stream_validate(
-        stream, audio_clip_suite(), ["clip_id"], out, ckpt, n_buckets=8,
-        transcripts=tr, check_audio=True,
+        stream, suite, ["clip_id"], out, str(tmp_path / "ckpt"), n_buckets=8, **kw
     )
     q.processAllAvailable()
     b.write.mode("append").parquet(src_dir)
     q.processAllAvailable()
     q.stop()
+    return out
 
-    got = {
-        r["constraint"]: (r["violation_count"], r["rows_scanned"])
-        for r in streaming.cumulative_verdicts(spark, out).collect()
+
+def _verdict_map(df):
+    return {
+        r["constraint"]: (r["violation_count"], r["rows_scanned"], r["passed"])
+        for r in df.collect()
     }
-    res = validate(clips, tr, check_audio=True, n_buckets=8)
-    audio_names = {"pcm_snr_invariant", "transcript_equality",
-                   "container_sr_consistency"}
-    exp = {
-        r["constraint"]: (r["violation_count"], r["rows_scanned"])
-        for r in res.verdicts.collect()
-        if r["constraint"] in audio_names
+
+
+def test_cumulative_verdicts_honor_null_rate(spark, tmp_path):
+    """A tolerant NotNull (max_null_rate > 0) over a column holding some
+    nulls passes when streamed exactly as it passes in a batch run: the
+    cumulative merge applies the suite's tolerance, not violation_count == 0."""
+    from engine.suite import ConstraintSuite, NotNull
+
+    clips = synth.gen_clips(spark, 1000, partitions=2).cache()
+    suite = ConstraintSuite().add(
+        NotNull("transcript_tolerant", column="transcript", max_null_rate=0.01)
+    )
+    out = _stream(spark, tmp_path, clips, suite)
+    got = _verdict_map(streaming.cumulative_verdicts(spark, out, suite=suite))
+    batch = checks.run_suite(clips, suite, ["clip_id"], n_buckets=8, stat_columns=[])
+    assert got == _verdict_map(batch.verdicts)
+    count, _, passed = got["transcript_tolerant"]
+    assert count > 0 and passed
+    batch.close()
+    clips.unpersist()
+
+
+@pytest.mark.slow
+def test_stream_validate_audio_matches_batch(spark, tmp_path):
+    """check_audio=True streams the FULL invariant pass (real PCM decode +
+    SNR, container-sr, transcript equality vs the static dim) through the
+    same suite compiler as the batch run: per-bucket and cumulative verdicts
+    of every streamed constraint equal validate(check_audio=True), including
+    duplicated clip_ids split across micro-batches."""
+    from engine.runner import validate
+
+    n = 1000
+    clips = synth.gen_clips(spark, n, partitions=4).cache()
+    tr = synth.gen_transcripts(spark, n, partitions=2).cache()
+    suite = audio_clip_suite()
+    out = _stream(spark, tmp_path, clips, suite, transcripts=tr, check_audio=True)
+
+    key = ("bucket_id", "constraint")
+    streamed = {
+        (r["bucket_id"], r["constraint"]): (r["violation_count"], r["rows_scanned"])
+        for r in spark.read.parquet(out).groupBy(*key).agg(
+            F.sum("violation_count").alias("violation_count"),
+            F.sum("rows_scanned").alias("rows_scanned"),
+        ).collect()
     }
-    assert {k: v for k, v in got.items() if k in audio_names} == exp
+    got = _verdict_map(streaming.cumulative_verdicts(spark, out, suite=suite))
+    names = {c for _, c in streamed}
+    assert names == {c.name for c in suite.row_local()} | {
+        "pcm_snr_invariant", "transcript_equality", "container_sr_consistency"}
+
+    with validate(clips, tr, check_audio=True, n_buckets=8) as res:
+        batch = {
+            (r["bucket_id"], r["constraint"]): (r["violation_count"], r["rows_scanned"])
+            for r in res.partition_verdicts.collect()
+            if r["constraint"] in names
+        }
+        exp = {c: v for c, v in _verdict_map(res.verdicts).items() if c in names}
+    assert streamed == batch
+    assert got == exp

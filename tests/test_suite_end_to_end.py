@@ -419,15 +419,40 @@ def test_partition_verdicts_sum_to_global(result):
         assert by_c[r["constraint"]] == r["violation_count"], r["constraint"]
 
 
-def test_verdicts_invariant_to_bucket_count(fixture_tables):
+def test_verdicts_invariant_to_bucket_count(spark):
     """Reference invariant: verdicts identical across partition counts
-    (SURVEY.md §5d)."""
-    clips, transcripts = fixture_tables
-    r2 = validate(clips, transcripts, n_buckets=2)
-    r32 = validate(clips, transcripts, n_buckets=32)
-    v2 = {(r["constraint"], r["violation_count"], r["passed"]) for r in r2.verdicts.collect()}
-    v32 = {(r["constraint"], r["violation_count"], r["passed"]) for r in r32.verdicts.collect()}
-    assert v2 == v32
+    (SURVEY.md §5d) — the payload checks included. Every constraint kind
+    reports bucket ids in range(n), and payload violation rows carry the
+    suite's own bucket, pmod(xxhash64(clip_id), n)."""
+    n_clips = 1000
+    clips = synth.gen_clips(spark, n_clips, partitions=4).cache()
+    transcripts = synth.gen_transcripts(spark, n_clips, partitions=2).cache()
+    payload = ("pcm_snr_invariant", "transcript_equality",
+               "container_sr_consistency", "bytes_not_null")
+    verdicts = {}
+    for n in (2, 8, 32):
+        res = validate(clips, transcripts, check_audio=True, n_buckets=n)
+        verdicts[n] = {
+            (r["constraint"], r["violation_count"], r["passed"])
+            for r in res.verdicts.collect()
+        }
+        buckets = {}
+        for r in res.partition_verdicts.select("constraint", "bucket_id").collect():
+            buckets.setdefault(r["constraint"], set()).add(r["bucket_id"])
+        assert set(buckets) == {c for c, _, _ in verdicts[n]}
+        for name, ids in buckets.items():
+            assert ids <= set(range(n)), (n, name, sorted(ids))
+        for name in payload:
+            rows = res.violations[name].select(
+                "bucket_id",
+                F.pmod(F.xxhash64("clip_id"), F.lit(n)).alias("want"),
+            ).collect()
+            assert all(r["bucket_id"] == r["want"] for r in rows), (n, name)
+        res.close()
+    assert verdicts[2] == verdicts[8] == verdicts[32]
+    assert len(verdicts[2]) == 10
+    clips.unpersist()
+    transcripts.unpersist()
 
 
 def test_lpc_fixture_clips_decode_losslessly():
