@@ -40,13 +40,6 @@ from engine import checks, synth
 
 SNR_DB_MIN = 30.0
 
-INVARIANT_SCHEMA = (
-    "clip_id string, bucket_id int, bytes_null boolean, pcm_ok boolean, "
-    "meta_sr_ok boolean, snr_db double, transcript_ok boolean, "
-    "decode_error string"
-)
-
-
 def decode_wav_pcm16(b: bytes) -> np.ndarray:
     """Decode a canonical 44-byte-header mono PCM16 WAV. Raises on malformed
     input (truncation, bad magic, non-PCM) — the error becomes a violation."""
@@ -759,62 +752,29 @@ class FixtureExpected:
 
 _default_expected = FixtureExpected()
 
-def audio_invariants(
+def payload_pass(
     clips: DataFrame,
-    transcripts: DataFrame,
+    bucket: Column,
     expected_fn: Callable[[str, int, int], np.ndarray] = _default_expected,
     snr_min_db: float = SNR_DB_MIN,
-    broadcast_dim: bool = False,
-    bucket: Column | None = None,
 ) -> DataFrame:
-    """Per-clip invariant results: pcm_ok (decode + SNR>=min), transcript_ok,
-    bytes_null (folded in here so the fused stats scan never has to
-    decompress the binary column — this pass reads it anyway).
+    """The one Arrow-UDF decode pass over the bare clips scan: per clip
+    (clip_id, bucket_id, bytes_null, pcm_ok, meta_sr_ok, snr_db,
+    decode_error). ``bucket`` is the verdict bucket expression
+    (``checks.bucket_expr``), evaluated over ``clips``.
 
-    One join (gold transcripts) + one mapInPandas pass. The transcripts dim is
-    fact-sized at 10^12 rows, so the join defaults to Catalyst/AQE's choice
-    (sort-merge or shuffled-hash on clip_id; co-located if both tables are
-    bucketed by clip_id). Pass ``broadcast_dim=True`` only for genuinely small
-    dims. Violations are ``~pcm_ok | ~transcript_ok``.
-
-    ``bucket`` is the verdict bucket expression (``checks.bucket_expr``),
-    evaluated over ``clips``; ``checks.run_suite`` passes the suite's own.
-    Without it the rows carry ``run_suite``'s default bucketing of
-    ``clip_id``.
-    """
-    # CRITICAL scale invariant: the binary column NEVER enters a join. The
-    # transcripts dim is fact-sized at 10^12 rows, so joining it to clips
-    # before the UDF would shuffle the whole payload column (measured: 24 GB
-    # shuffled + sorted at 1M rows, 5x slowdown). Instead:
-    #   (1) decode/SNR runs on the bare clips scan (no join),
-    #   (2) transcript equality is a pruned-column join (clip_id, transcript),
-    #   (3) the two SMALL result sets join on clip_id at the end.
-    if bucket is None:
-        bucket = checks.bucket_expr(["clip_id"], 32)
-    # every codec's validation now reads the WHOLE payload (real flac decode;
-    # full Ogg page-chain CRCs; full MP3 frame-chain walk), so the r2
-    # header-window byte pruning no longer applies to any codec and was
-    # removed — the full binary column crosses the JVM->Python Arrow pipe
-    # once, in the one pass that exists to read it.
+    CRITICAL scale invariant: the binary column NEVER enters a join or a
+    shuffle. Joining the fact-sized transcripts dim to clips before the UDF
+    would shuffle the whole payload column (measured: 24 GB shuffled +
+    sorted at 1M rows, 5x slowdown); transcript equality is decided on the
+    pruned key columns instead (``checks.key_groups``) and only its failing
+    keys meet these rows (``with_transcript_ok``)."""
+    # every codec's validation reads the WHOLE payload (real flac decode;
+    # full Ogg page-chain CRCs; full MP3 frame-chain walk), so the full
+    # binary column crosses the JVM->Python Arrow pipe once, in the one pass
+    # that exists to read it.
     pcm_in = clips.select(
         "clip_id", bucket.alias(checks.BUCKET), "bytes", "sr_hz", "dur_ms", "codec"
-    )
-
-    dim = transcripts.select("clip_id", "transcript_gold")
-    if broadcast_dim:
-        dim = F.broadcast(dim)
-    # aggregate to ONE row per clip_id: duplicated clips (a planted/expected
-    # condition) would otherwise fan out k x k rows in the final join and
-    # inflate rows_scanned / violation counts of every audio check
-    t_res = (
-        clips.select("clip_id", "transcript")
-        .join(dim, "clip_id", "left")
-        .groupBy("clip_id")
-        .agg(
-            F.min(
-                F.coalesce(F.col("transcript") == F.col("transcript_gold"), F.lit(False))
-            ).alias("transcript_ok")
-        )
     )
 
     # mapInArrow, not mapInPandas: pandas materializes one Python bytes
@@ -823,18 +783,53 @@ def audio_invariants(
     def check(batches):
         yield from invariant_batches(batches, expected_fn, snr_min_db)
 
-    pcm_res = pcm_in.mapInArrow(
+    return pcm_in.mapInArrow(
         check,
         schema=(
             "clip_id string, bucket_id int, bytes_null boolean, pcm_ok boolean, "
             "meta_sr_ok boolean, snr_db double, decode_error string"
         ),
     )
-    return pcm_res.join(t_res, "clip_id", "left").select(
+
+
+def with_transcript_ok(pcm: DataFrame, mismatched: DataFrame) -> DataFrame:
+    """``payload_pass`` rows plus ``transcript_ok``: False for a null
+    clip_id and for the ``mismatched`` clip ids (the keys whose
+    ``checks.key_groups`` transcript_ok is False — violations only, so the
+    broadcast is small and the decode rows never shuffle)."""
+    bad = F.broadcast(mismatched.select("clip_id", F.lit(True).alias("__mismatch")))
+    return pcm.join(bad, "clip_id", "left").select(
         "clip_id", "bucket_id", "bytes_null", "pcm_ok", "meta_sr_ok", "snr_db",
-        F.coalesce("transcript_ok", F.lit(False)).alias("transcript_ok"),
+        (F.col("clip_id").isNotNull() & F.col("__mismatch").isNull()).alias(
+            "transcript_ok"
+        ),
         "decode_error",
     )
+
+
+def audio_invariants(
+    clips: DataFrame,
+    transcripts: DataFrame,
+    expected_fn: Callable[[str, int, int], np.ndarray] = _default_expected,
+    snr_min_db: float = SNR_DB_MIN,
+) -> DataFrame:
+    """Per-clip invariant results: pcm_ok (decode + SNR>=min), meta_sr_ok,
+    transcript_ok (against ``transcripts.transcript_gold``), bytes_null
+    (folded in here so the fused stats scan never has to decompress the
+    binary column — this pass reads it anyway), bucketed like ``run_suite``'s
+    default, ``checks.bucket_expr(["clip_id"], 32)``.
+
+    One decode pass (``payload_pass``) + one co-grouped key pass
+    (``checks.key_groups``, the same transcript equality ``run_suite``
+    compiles). Violations are ``~pcm_ok | ~transcript_ok | ~meta_sr_ok``.
+    """
+    groups = checks.key_groups(
+        clips, list(checks.GOLD_KEY),
+        [transcripts.select("clip_id", "transcript_gold")], gold=True,
+    )
+    mismatched = groups.filter(~F.col("transcript_ok")).select("clip_id")
+    pcm = payload_pass(clips, checks.bucket_expr(["clip_id"], 32), expected_fn, snr_min_db)
+    return with_transcript_ok(pcm, mismatched)
 
 
 def invariant_batches(batches, expected_fn, snr_min_db):

@@ -4,9 +4,9 @@ One call = the full constraint-suite pass over a clips table, compiled by
 ``checks.run_suite`` (the one suite compiler):
 
   1. fused row-local checks + column stats (one scan)
-  2. uniqueness shuffle agg
-  3. referential-integrity anti-join
-  4. with ``check_audio=True``: the audio/transcript payload checks
+  2. one co-grouped key pass for uniqueness, referential integrity and (with
+     the payload checks) transcript equality on ``clip_id``
+  3. with ``check_audio=True``: the audio/transcript payload checks
      (``suite.payload_checks``) as one Arrow-UDF decode pass (engine/audio.py)
 
 returning (verdicts, partition_verdicts, violations, stats) — the reference's

@@ -15,8 +15,9 @@ mirroring the reference's "count + exact positions" verdict contract
 Row-local constraints (NotNull / Range / Domain / RowInvariant) expose
 ``violation_expr`` — a boolean Column where True marks a violating row — so the
 whole set fuses into ONE conditional-aggregation pass over the fact table.
-Cross-row constraints (Unique, RefIntegrity) compile to a shuffle agg / an
-anti-join on pruned columns. Payload constraints (PayloadCheck) compile to
+Cross-row constraints (Unique, RefIntegrity) on one key tuple compile to one
+co-grouped shuffle agg on pruned columns; a RefIntegrity on a key no Unique
+covers compiles to an anti-join. Payload constraints (PayloadCheck) compile to
 one Arrow-UDF decode pass over the binary column (engine/audio.py).
 """
 
@@ -117,24 +118,40 @@ class RowInvariant(Constraint):
 
 @dataclass(frozen=True)
 class Unique(Constraint):
-    """Key uniqueness. Compiles to a pruned-column groupBy count (map-side
-    partial aggregation = the built-in salting for hot keys; see
+    """Key uniqueness. Compiles to the co-grouped key pass over its columns
+    (``checks.key_groups``: a pruned-column groupBy count whose map-side
+    partial aggregation is the built-in salting for hot keys; see
     engine/skew.py for the explicit two-phase variant used when a single key
     dominates). Null keys are ignored (flag them with NotNull)."""
 
     columns: tuple = ()
+
+    def __post_init__(self):
+        if not self.columns:
+            raise ValueError(f"{self.name}: Unique needs at least one column")
 
 
 @dataclass(frozen=True)
 class RefIntegrity(Constraint):
     """Referential integrity: every non-null ``columns`` tuple in the fact
     table must exist in ``ref_columns`` of the ``ref`` table (supplied at run
-    time). Compiles to LEFT ANTI JOIN — broadcast when the dim is small,
-    shuffle hash otherwise (Catalyst/AQE decides)."""
+    time). Null fact keys are ignored; null ref keys satisfy nothing. When
+    ``columns`` equal a Unique's columns (and cover the run's key columns)
+    the check rides that Unique's co-grouped key pass; otherwise it compiles
+    to a LEFT ANTI JOIN against the broadcast distinct ref keys."""
 
     columns: tuple = ()
     ref_name: str = ""
     ref_columns: tuple = ()
+
+    def __post_init__(self):
+        if not self.columns:
+            raise ValueError(f"{self.name}: RefIntegrity needs at least one column")
+        if len(self.columns) != len(self.ref_columns):
+            raise ValueError(
+                f"{self.name}: {len(self.columns)} columns but "
+                f"{len(self.ref_columns)} ref_columns"
+            )
 
 
 #: the per-clip boolean columns ``audio.audio_invariants`` emits

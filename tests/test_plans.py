@@ -136,3 +136,39 @@ def test_segment_query_broadcasts_dim_payload_never_shuffles(spark):
     for line in p.splitlines():
         if "Exchange" in line and "reuse" not in line.lower():
             assert "bytes" not in line, line
+
+
+def test_key_pass_one_clip_id_shuffle_no_antijoin(spark):
+    """Unique(clip_id), RefIntegrity(clip_id -> transcripts) and transcript
+    equality share ONE co-grouped key pass: the persisted plan behind their
+    violation rows holds exactly one hash exchange on clip_id and no
+    anti-join."""
+    from engine import checks, synth
+    from engine.suite import audio_clip_suite, with_payload_checks
+
+    clips = synth.gen_clips(spark, 200, partitions=2)
+    transcripts = synth.gen_transcripts(spark, 200, partitions=2)
+    res = checks.run_suite(clips, with_payload_checks(audio_clip_suite()), ["clip_id"],
+                           refs={"transcripts": transcripts}, n_buckets=8,
+                           stat_columns=[])
+    for name in ("clip_id_unique", "transcript_ref_integrity"):
+        p = plan_of(res.violations[name])
+        shuffles = [l for l in p.splitlines()
+                    if "Exchange hashpartitioning(clip_id" in l]
+        assert len(shuffles) == 1, p
+        assert "LeftAnti" not in p, p
+    res.close()
+
+
+def test_ri_on_uncovered_key_keeps_broadcast_antijoin(spark):
+    """lineitem_suite's l_partkey -> part matches no Unique: it keeps the
+    broadcast anti-join against the distinct ref keys."""
+    from engine import checks, queries as qmod
+
+    li = spark.read.parquet(f"{SF}/lineitem.parquet")
+    part = spark.read.parquet(f"{SF}/part.parquet")
+    res = checks.run_suite(li, qmod.lineitem_suite(), key_cols=["l_orderkey"],
+                           refs={"part": part}, n_buckets=8, stat_columns=[])
+    p = plan_of(res.violations["l_partkey_ref_part"])
+    assert "BroadcastHashJoin" in p and "LeftAnti" in p, p
+    res.close()
