@@ -75,13 +75,8 @@ def validate_ogg_stream(b) -> None:
     and verify every page's CRC-32 in one vectorized batch
     (engine/oggcrc.py). Opus PACKET decode stays stubbed (no codec libs);
     any structural corruption anywhere in the stream raises."""
-    from engine.oggcrc import crc32_many
-
     pages, stored, _ = walk_ogg_pages(b)
-    crcs = crc32_many(pages)
-    for c, s in zip(crcs, stored):
-        if int(c) != s:
-            raise ValueError("bad_ogg_page")
+    verify_crcs((("ogg", pages, stored),))
 
 
 def walk_ogg_pages(
@@ -507,17 +502,6 @@ def validate_mp3_stream(b) -> None:
         raise ValueError("bad_mp3_frame")
 
 
-#: codecs whose PACKET decoder is stubbed (no codec libs in this image) but
-#: whose container STRUCTURE is now fully validated end-to-end: every Ogg
-#: page CRC-checked, every MP3 frame header sync-verified with exact chain
-#: coverage. flac graduated further: engine/flac.py decodes the verbatim
-#: subset to PCM with full CRC-8/CRC-16 verification.
-_HEADER_VALIDATORS = {
-    "opus": validate_opus_stream,
-    "mp3": validate_mp3_stream,
-}
-
-
 def container_sr(b: bytes, codec: str | None) -> int | None:
     """Sample rate as DECLARED BY THE CONTAINER (WAV fmt chunk, FLAC
     STREAMINFO, OpusHead), or None when the container doesn't carry one we
@@ -563,8 +547,8 @@ def container_sr(b: bytes, codec: str | None) -> int | None:
 def _decode_ogg_flac_parts(b):
     """Ogg-FLAC (xiph FLAC-to-Ogg mapping): full page walk + packet-stream
     reassembly + REAL FLAC body decode behind the Ogg layer. Returns
-    (pcm, deferred_crc_groups) — both the page CRC-32s and the frame
-    CRC-16s verify either inline (``decode``) or batch-folded
+    (pcm, channels, deferred_crc_groups) — both the page CRC-32s and the
+    frame CRC-16s verify either inline (``verify_crcs``) or batch-folded
     (``invariant_batches``). An Ogg stream whose first packet is not the
     FLAC mapping is valid-but-out-of-subset for this codec tag."""
     from engine import flac as flac_mod
@@ -582,9 +566,6 @@ def _decode_ogg_flac_parts(b):
         raise NotImplementedError("codec_decoder_missing:ogg_mapping")
     native = first[9:] + b"".join(payloads[1:])
     pcm, frames, fstored, nch = flac_mod.parse(native)
-    # flac group FIRST: the batch override loop processes groups in this
-    # order, so a page-CRC failure wins the error string (pages were always
-    # verified before frames)
     return pcm, nch, (("flac", frames, fstored), ("ogg", pages, stored))
 
 
@@ -607,68 +588,64 @@ def decode_with_channels(b, codec: str | None) -> tuple[np.ndarray, int]:
     """(interleaved_pcm_float32, channels). Channel count comes from the
     container (the table schema carries no channels column — BASELINE.json
     input_hint), so multimodal consumers (features / segmentation /
-    resampling) can deinterleave without a side channel of metadata."""
-    if codec in (None, "pcm_s16le", "wav"):
-        return decode_wav_pcm16(b), 1
-    if codec == "flac":
-        # REAL body decode (engine/flac.py): in-subset frames to PCM
-        # (mono + stereo, 8-24 bit since r6), CRC-8 header + CRC-16 frame
-        # verification, in either container (native 'fLaC' or Ogg-FLAC).
-        # Corruption -> ValueError -> violation; valid-but-out-of-subset ->
-        # NotImplementedError -> plumbing pass (same contract as the
-        # remaining stubs).
-        from engine import flac as flac_mod
-
-        if b is not None and bytes(memoryview(b)[:4]) == b"OggS":
-            from engine.oggcrc import crc32_many
-
-            pcm, nch, deferred = _decode_ogg_flac_parts(b)
-            groups = {kind: (chunks, stored) for kind, chunks, stored in deferred}
-            pages, pstored = groups["ogg"]
-            for c, s in zip(crc32_many(pages), pstored):
-                if int(c) != s:
-                    raise ValueError("bad_ogg_page")
-            frames, fstored = groups["flac"]
-            for c, s in zip(flac_mod.crc16_many(frames), fstored):
-                if int(c) != s:
-                    raise ValueError("bad_flac_frame")
-            return pcm, nch
-        return flac_mod.decode_meta(b)
-    if codec in _HEADER_VALIDATORS:
-        # body decode requires codec libs not present in this image, but the
-        # container header IS verified (magic / page CRC / frame sync) — a
-        # corrupted opus/mp3 clip raises ValueError here and becomes a
-        # violation instead of silently auto-passing.
-        _HEADER_VALIDATORS[codec](b)
+    resampling) can deinterleave without a side channel of metadata.
+    ``decode_parts`` with its CRCs verified inline; a structure-validated
+    clip whose packet decoder is missing raises NotImplementedError."""
+    pcm, nch, deferred = decode_parts(b, codec)
+    verify_crcs(deferred)
+    if pcm is None:
         raise NotImplementedError(f"codec_decoder_missing:{codec}")
-    raise NotImplementedError(f"codec_decoder_missing:{codec}")
+    return pcm, nch
 
 
-def _decode_for_batch(b, codec: str | None):
-    """``decode`` with the CRC verification DEFERRED for batch folding:
-    returns (pcm_or_None, deferred) where pcm None means
-    structure-validated-but-undecodable (packet decoder missing -> stub
-    pass) and ``deferred`` lists ('flac'|'ogg', chunks, stored_crcs) still
-    awaiting batched CRC verification. Structural errors raise exactly like
-    ``decode``."""
+def decode_parts(b, codec: str | None):
+    """The one codec dispatch: (pcm_or_None, channels, deferred). pcm None
+    means structure-validated-but-undecodable (opus/mp3: the packet decoder
+    needs codec libs this image lacks, but every page CRC, the RFC 6716
+    packet framing and the MP3 frame/side-info chain are checked).
+    ``deferred`` lists ('flac'|'ogg', chunks, stored_crcs) still awaiting
+    CRC verification, inline (``verify_crcs``) or batch-folded
+    (``invariant_batches``). flac is a REAL body decode (engine/flac.py) in
+    either container, native 'fLaC' or Ogg-FLAC. Corruption raises
+    ValueError (a violation); a valid-but-out-of-subset shape raises
+    NotImplementedError (a plumbing pass)."""
     if codec in (None, "pcm_s16le", "wav"):
-        return decode_wav_pcm16(b), ()
+        return decode_wav_pcm16(b), 1, ()
     if codec == "flac":
         from engine import flac as flac_mod
 
         if b is not None and bytes(memoryview(b)[:4]) == b"OggS":
-            pcm, _nch, deferred = _decode_ogg_flac_parts(b)
-            return pcm, deferred
-        pcm, frames, stored, _nch = flac_mod.parse(b)
-        return pcm, (("flac", frames, stored),)
+            return _decode_ogg_flac_parts(b)
+        pcm, frames, stored, nch = flac_mod.parse(b)
+        return pcm, nch, (("flac", frames, stored),)
     if codec == "opus":
         pages, stored, _ = walk_ogg_pages(b)
         validate_opus_packets(b)  # framing is cheap; only CRCs defer
-        return None, (("ogg", pages, stored),)
+        return None, 0, (("ogg", pages, stored),)
     if codec == "mp3":
         validate_mp3_stream(b)
-        return None, ()
+        return None, 0, ()
     raise NotImplementedError(f"codec_decoder_missing:{codec}")
+
+
+def _crc_checks():
+    """(kind, crc_fn, error) per deferred CRC kind, Ogg pages first: a page
+    CRC failure outranks a frame CRC failure (pages wrap the frames)."""
+    from engine.flac import crc16_many
+    from engine.oggcrc import crc32_many
+
+    return (("ogg", crc32_many, "bad_ogg_page"), ("flac", crc16_many, "bad_flac_frame"))
+
+
+def verify_crcs(deferred) -> None:
+    """Verify ``decode_parts``' deferred CRC groups of one clip; raises the
+    failing kind's ValueError."""
+    groups = {kind: (chunks, stored) for kind, chunks, stored in deferred}
+    for kind, crc_fn, err in _crc_checks():
+        if kind in groups:
+            chunks, stored = groups[kind]
+            if any(int(c) != s for c, s in zip(crc_fn(chunks), stored)):
+                raise ValueError(err)
 
 
 def snr_db(expected: np.ndarray, actual: np.ndarray) -> float:
@@ -710,17 +687,27 @@ class FixtureExpected:
     WHOLE Arrow batch in one vectorized pass (engine/fastrng.py — the
     per-clip SeedSequence+Generator construction was ~50 us/clip, the
     largest line in the UDF profile). ``__call__`` keeps the one-clip path
-    for callers outside the batch loop."""
+    for callers outside the batch loop.
+
+    An id that is not a fixture id ``<prefix>_<n>`` (a null id included) has
+    no expected signal: its row is None, which the payload pass reports as
+    ``no_expected_signal``."""
 
     _SCALE = np.float32(32000.0 * 0.9 / 32768.0)  # generator's int16 scale
 
-    def prepare(self, clip_ids, srs, durs, codecs=None):
-        ids = np.fromiter(
-            (int(c.rsplit("_", 1)[1]) for c in clip_ids), np.int64, len(clip_ids)
-        )
-        f1, phase = synth.clip_params_batch(ids)
+    @staticmethod
+    def _index(clip_id: str | None) -> int:
+        _, sep, tail = (clip_id or "").rpartition("_")
+        ok = sep and tail.isascii() and tail.isdigit() and len(tail) < 19
+        return int(tail) if ok else -1
 
-        def row(j: int) -> np.ndarray:
+    def prepare(self, clip_ids, srs, durs, codecs=None):
+        ids = np.fromiter(map(self._index, clip_ids), np.int64, len(clip_ids))
+        f1, phase = synth.clip_params_batch(np.maximum(ids, 0))
+
+        def row(j: int) -> np.ndarray | None:
+            if ids[j] < 0:
+                return None
             sr = int(srs[j])
             n_samp = min(int(sr * max(int(durs[j]), 200) / 1000), 200_000)
             left = synth.wave32(f1[j], phase[j], sr, n_samp)
@@ -743,10 +730,10 @@ class FixtureExpected:
         return row
 
     def __call__(
-        self, clip_id: str, sr: int, dur_ms: int, codec: str | None = None
-    ) -> np.ndarray:
-        # delegates to ``prepare`` so both paths share ONE id parse (rsplit
-        # — ADVICE r4) and one stereo rule
+        self, clip_id: str | None, sr: int, dur_ms: int, codec: str | None = None
+    ) -> np.ndarray | None:
+        # delegates to ``prepare`` so both paths share ONE id parse
+        # (ADVICE r4) and one stereo rule
         return self.prepare([clip_id], [sr], [max(dur_ms, 200)], [codec])(0)
 
 
@@ -755,7 +742,7 @@ _default_expected = FixtureExpected()
 def payload_pass(
     clips: DataFrame,
     bucket: Column,
-    expected_fn: Callable[[str, int, int], np.ndarray] = _default_expected,
+    expected_fn: Callable[..., np.ndarray | None] = _default_expected,
     snr_min_db: float = SNR_DB_MIN,
 ) -> DataFrame:
     """The one Arrow-UDF decode pass over the bare clips scan: per clip
@@ -810,7 +797,7 @@ def with_transcript_ok(pcm: DataFrame, mismatched: DataFrame) -> DataFrame:
 def audio_invariants(
     clips: DataFrame,
     transcripts: DataFrame,
-    expected_fn: Callable[[str, int, int], np.ndarray] = _default_expected,
+    expected_fn: Callable[..., np.ndarray | None] = _default_expected,
     snr_min_db: float = SNR_DB_MIN,
 ) -> DataFrame:
     """Per-clip invariant results: pcm_ok (decode + SNR>=min), meta_sr_ok,
@@ -843,11 +830,13 @@ def invariant_batches(batches, expected_fn, snr_min_db):
     cost of the GF(2) fold was the second-largest profile line). A CRC
     mismatch then overrides that row to the same violation it would have
     raised inline ('bad_flac_frame' / 'bad_ogg_page', pcm_ok=False,
-    snr=NaN)."""
-    import pyarrow as pa
+    snr=NaN).
 
-    from engine.flac import crc16_many
-    from engine.oggcrc import crc32_many
+    ``expected_fn(clip_id, sr, dur_ms, codec)`` (or its batch seam
+    ``prepare``) gives a clip's expected PCM, or None when there is none:
+    such a decodable clip fails with ``no_expected_signal``, and the other
+    rows of its batch keep their verdicts."""
+    import pyarrow as pa
 
     for rb in batches:
         n = rb.num_rows
@@ -858,14 +847,10 @@ def invariant_batches(batches, expected_fn, snr_min_db):
         srs = col["sr_hz"].to_numpy(zero_copy_only=False)
         durs = col["dur_ms"].to_numpy(zero_copy_only=False)
 
-        row_expected = None
         prep = getattr(expected_fn, "prepare", None)
         if prep is not None:
-            try:
-                row_expected = prep(clip_ids, srs, durs, codecs)
-            except Exception:
-                row_expected = None  # e.g. unparseable ids -> per-row path
-        if row_expected is None:
+            row_expected = prep(clip_ids, srs, durs, codecs)
+        else:
             def row_expected(j):
                 return expected_fn(clip_ids[j], int(srs[j]), int(durs[j]), codecs[j])
 
@@ -874,13 +859,8 @@ def invariant_batches(batches, expected_fn, snr_min_db):
         meta_sr_ok = np.ones(n, dtype=bool)
         snrs = np.full(n, np.nan)
         errs: list[str | None] = [None] * n
-        # deferred CRC pools, folded once per batch
-        flac_frames: list = []
-        flac_stored: list[int] = []
-        flac_rows: list[int] = []
-        ogg_pages: list = []
-        ogg_stored: list[int] = []
-        ogg_rows: list[int] = []
+        # deferred CRC pools, folded once per batch: kind -> (chunks, stored, rows)
+        pools = {kind: ([], [], []) for kind, _, _ in _crc_checks()}
         for j in range(n):
             if not blob[j].is_valid:
                 bytes_null[j] = True
@@ -888,16 +868,12 @@ def invariant_batches(batches, expected_fn, snr_min_db):
                 continue
             buf = blob[j].as_buffer()
             try:
-                actual, deferred = _decode_for_batch(buf, codecs[j])
+                actual, _nch, deferred = decode_parts(buf, codecs[j])
                 for kind, chunks, stored in deferred:
-                    if kind == "flac":
-                        flac_frames.extend(chunks)
-                        flac_stored.extend(stored)
-                        flac_rows.extend([j] * len(chunks))
-                    else:
-                        ogg_pages.extend(chunks)
-                        ogg_stored.extend(stored)
-                        ogg_rows.extend([j] * len(chunks))
+                    pool_chunks, pool_stored, pool_rows = pools[kind]
+                    pool_chunks.extend(chunks)
+                    pool_stored.extend(stored)
+                    pool_rows.extend([j] * len(chunks))
                 if actual is None:
                     # structure-validated, packet decoder missing in this
                     # image: plumbing-verified, treat as pass so domain
@@ -907,9 +883,13 @@ def invariant_batches(batches, expected_fn, snr_min_db):
                     errs[j] = "codec_decoder_missing"
                 else:
                     exp = row_expected(j)
-                    s = snr_db(exp, actual)
-                    snrs[j] = s
-                    pcm_ok[j] = s >= snr_min_db
+                    if exp is None:
+                        pcm_ok[j] = False
+                        errs[j] = "no_expected_signal"
+                    else:
+                        s = snr_db(exp, actual)
+                        snrs[j] = s
+                        pcm_ok[j] = s >= snr_min_db
             except NotImplementedError:
                 pcm_ok[j] = True
                 errs[j] = "codec_decoder_missing"
@@ -923,18 +903,16 @@ def invariant_batches(batches, expected_fn, snr_min_db):
             csr = container_sr(bytes(memoryview(buf)[:256]), codecs[j])
             meta_sr_ok[j] = csr is None or csr == int(srs[j])
         # batched CRC verdicts: any failed chunk demotes its row to the same
-        # violation the inline path raised (page CRC outranks frame CRC,
-        # matching the old check order: pages were verified before decode).
+        # violation the inline path raised; kinds run lowest precedence
+        # first, so a page CRC error overwrites a frame CRC error (verify_crcs).
         # Fold in ~256 KiB groups, NOT one giant matrix: each chunk's CRC is
         # independent of its batch-mates (leading-zero padding is a no-op),
         # and a cache-resident fold matrix wins big at wide parallelism —
         # measured 32-way: per-clip 0.85s, 64-chunk groups 0.33s, one
         # whole-batch matrix 4.84s (DRAM-bound; same lesson as the rejected
         # integer-domain SNR, BENCH.md r4).
-        for chunks, stored, rows, crc_fn, err in (
-            (flac_frames, flac_stored, flac_rows, crc16_many, "bad_flac_frame"),
-            (ogg_pages, ogg_stored, ogg_rows, crc32_many, "bad_ogg_page"),
-        ):
+        for kind, crc_fn, err in reversed(_crc_checks()):
+            chunks, stored, rows = pools[kind]
             if not chunks:
                 continue
             # size groups by the LARGEST chunk: the fold matrix pads every

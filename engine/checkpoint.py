@@ -14,7 +14,12 @@ latest-by-timestamp resolution (``utils.py:226-230``). Generalized here:
     (run_id, shard_id);
   * each shard is one ``checks.run_suite`` call — the same suite compiler as
     a batch ``validate``, payload checks included — whose cached frames are
-    released before the next shard;
+    released before the next shard; an empty shard gets the (0, 0, passed)
+    verdict per constraint that run_suite gives any empty input, so it is
+    marked done like any other;
+  * with ``stat_columns``, each shard also appends its merged column-stat
+    partials as lineage rows (``stats.to_lineage``), and ``stats()`` reads
+    them back through engine/stats.py's one merge + finalize;
   * resume = read done shard ids for the run_id, skip them, process the rest;
   * final verdicts = ``checks.rollup_verdicts`` over shard rows — equal to an
     uninterrupted run.
@@ -38,8 +43,10 @@ import uuid
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from engine import checks
+from engine import stats as stats_mod
 from engine.snapshots import SnapshotTable
 from engine.suite import ConstraintSuite
 
@@ -49,11 +56,10 @@ CKPT_SCHEMA = (
     "updated_at timestamp"
 )
 
-#: per-shard column-stat PARTIALS (north rule: per-partition lineage + stat
-#: metrics). Partials, not finalized values, so the global roll-up is exact
-#: and mergeable: rows/nulls/sum/sumsq add, min/max fold, ndv merges as an
-#: HLL sketch binary (hll_union_agg) — the same mergeability contract as the
-#: fused stats scan (engine/stats.py).
+#: per-shard column-stat lineage: each shard's merged PARTIALS as long rows
+#: (engine/stats.py ``to_lineage``), not finalized values, so the global
+#: roll-up (``stats.lineage_stats``) is the same mergeable merge + finalize
+#: as the fused stats scan. An empty shard records zero partials.
 STATS_SCHEMA = (
     "run_id string, shard_id int, column_name string, metric string, "
     "value double, hll binary, updated_at timestamp"
@@ -90,37 +96,6 @@ class CheckpointedRunner:
         )
 
     # -- per-shard column-stat lineage ----------------------------------------
-    def _append_shard_stats(self, run_id, shard_id, res, shard_df, stat_columns, now):
-        from engine import stats as stats_mod
-
-        numeric = set(stats_mod.numeric_columns(shard_df, stat_columns))
-        collected = res.bucket_stats.drop(checks.BUCKET).collect()
-        # an EMPTY shard (hash bucket with no rows) has no partial row at
-        # all; record zero partials so the lineage stays complete and the
-        # global roll-up is unaffected (null hll rows are skipped — the
-        # union over the other shards is the correct sketch)
-        wide = collected[0].asDict() if collected else {}
-        rows = []
-
-        def add(col, metric, value=None, hll=None):
-            rows.append(dict(run_id=run_id, shard_id=shard_id, column_name=col,
-                             metric=metric, value=value, hll=hll, updated_at=now))
-
-        for c in stat_columns:
-            add(c, "rows", float(wide.get("__rows") or 0))
-            add(c, "nulls", float(wide.get(f"{c}__nulls") or 0))
-            sk = wide.get(f"{c}__hll")
-            if sk is not None:
-                add(c, "hll", None, bytes(sk))
-            if c in numeric:
-                for m in ("min", "max", "sum", "sumsq"):
-                    v = wide.get(f"{c}__{m}")
-                    add(c, m, None if v is None else float(v))
-        df = self.spark.createDataFrame(pd.DataFrame(rows), schema=STATS_SCHEMA)
-        self.stats_table.append(
-            df.coalesce(1), properties={"run_id": run_id, "shard_id": shard_id}
-        )
-
     def shard_stats(self, run_id: str) -> DataFrame:
         """Raw per-shard stat PARTIALS for ``run_id`` (lineage granularity),
         deduped per (shard, column, metric) — partials are deterministic, so
@@ -133,49 +108,10 @@ class CheckpointedRunner:
 
     def stats(self, run_id: str) -> DataFrame:
         """Global column stats merged EXACTLY from the per-shard partials:
-        ``(column_name, metric, value)`` with the same metrics as
-        engine/stats.py's one-scan path (count, null_count, null_rate,
-        approx_ndv via merged HLL sketches, min, max, mean, stddev) — a
-        resumed/sharded run's stats provably equal an uninterrupted scan."""
-        p = self.shard_stats(run_id)
-        val = lambda m: F.when(F.col("metric") == m, F.col("value"))
-        g = p.groupBy("column_name").agg(
-            F.sum(val("rows")).alias("__rows"),
-            F.sum(val("nulls")).alias("__nulls"),
-            F.min(val("min")).alias("__min"),
-            F.max(val("max")).alias("__max"),
-            F.sum(val("sum")).alias("__sum"),
-            F.sum(val("sumsq")).alias("__sumsq"),
-            F.hll_union_agg(
-                F.when(F.col("metric") == "hll", F.col("hll"))
-            ).alias("__hll"),
-            F.max((F.col("metric") == "min").cast("int")).alias("__is_num"),
-        )
-
-        def metric(m, v):
-            return F.struct(F.lit(m).alias("metric"), v.cast("double").alias("value"))
-
-        rows, nulls = F.col("__rows"), F.col("__nulls")
-        n = rows - nulls
-        mean = F.col("__sum") / n
-        var = F.greatest(F.col("__sumsq") / n - mean * mean, F.lit(0.0))
-        base = F.array(
-            metric("count", rows),
-            metric("null_count", nulls),
-            metric("null_rate", nulls / rows),
-            metric("approx_ndv", F.hll_sketch_estimate(F.col("__hll"))),
-        )
-        num = F.array(
-            metric("min", F.col("__min")),
-            metric("max", F.col("__max")),
-            metric("mean", mean),
-            metric("stddev", F.sqrt(var)),
-        )
-        structs = F.when(F.col("__is_num") == 1, F.concat(base, num)).otherwise(base)
-        return (
-            g.select("column_name", F.explode(structs).alias("s"))
-            .select("column_name", "s.metric", "s.value")
-        )
+        ``(column_name, metric, value)``, the metrics and empty-input
+        semantics of engine/stats.py's one-scan path — a resumed/sharded
+        run's stats provably equal an uninterrupted scan."""
+        return stats_mod.lineage_stats(self.shard_stats(run_id))
 
     # -- resumable run -----------------------------------------------------------
     def run(
@@ -232,21 +168,20 @@ class CheckpointedRunner:
                 n_buckets=1, stat_columns=stat_columns or [],
             ) as res:
                 verdicts = res.verdicts.collect()
-                if not verdicts:
-                    # an EMPTY shard produces no verdict rows at all; record
-                    # explicit zero-rows for every constraint so the shard is
-                    # marked done (otherwise a resume would re-run it forever)
-                    verdicts = [
-                        dict(constraint=c.name, violation_count=0, rows_scanned=0,
-                             passed=True)
-                        for c in suite.constraints
-                    ]
                 now = pd.Timestamp.utcnow().tz_localize(None)
                 if stat_columns:
                     # stats commit BEFORE the 'done' verdict rows: a crash in
                     # between re-runs the shard, whose deterministic partials
                     # dedupe at read time (stats()/shard_stats()).
-                    self._append_shard_stats(run_id, s, res, shard, stat_columns, now)
+                    numeric = stats_mod.numeric_columns(shard, stat_columns)
+                    lineage = stats_mod.to_lineage(res.bucket_stats, stat_columns, numeric)
+                    self.stats_table.append(
+                        lineage.withColumns({
+                            "run_id": F.lit(run_id), "shard_id": F.lit(s),
+                            "updated_at": F.lit(now),
+                        }).to(T.StructType.fromDDL(STATS_SCHEMA)).coalesce(1),
+                        properties={"run_id": run_id, "shard_id": s},
+                    )
             secs = time.time() - t0
             self._append(
                 [

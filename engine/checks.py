@@ -25,10 +25,11 @@ jobs:
 Every cross-row and payload constraint reports sparse per-bucket rows (only
 the buckets holding violations); the fused scan gives every scanned bucket a
 zero row for each of them, and one groupBy folds the two into
-``partition_verdicts``. Jobs per ``verdicts`` collect of a ``validate()``
-pass (local[4], AQE on): 6 for the metadata suite and 9 with the payload
-checks, down from 14 and 20 when each key constraint ran its own shuffle or
-join and each per-bucket count its own join.
+``partition_verdicts``. An empty input scans no bucket, yet still gets a
+(0, 0, passed) verdict per constraint. Jobs per ``verdicts`` collect of a
+``validate()`` pass (local[4], AQE on): 6 for the metadata suite and 9 with
+the payload checks, down from 14 and 20 when each key constraint ran its own
+shuffle or join and each per-bucket count its own join.
 
 The bucket id is ``pmod(xxhash64(key), n_buckets)`` — a *logical* partition
 that is stable across cluster sizes, partition counts, and resume boundaries
@@ -535,10 +536,19 @@ def run_suite(
     for s in sources[1:]:
         all_violations = all_violations.unionByName(s, allowMissingColumns=True)
 
+    # every constraint has a verdict, on an empty input too: the roll-up adds
+    # a (0, 0) row each, a literal relation in its stage (no scan, no job);
+    # partition_verdicts gets none, as an empty input scans no bucket
+    names = {f"c{i}": c.name for i, c in enumerate(suite.constraints)}
+    verdict_parts = per_bucket.unionByName(df.sparkSession.sql(
+        "VALUES " + ", ".join(f"(:{k}, 0L, 0L)" for k in names)
+        + " AS t(constraint, violation_count, rows_scanned)", args=names,
+    ), allowMissingColumns=True) if names else per_bucket
+
     return SuiteResult(
         # sums are associative: the global roll-up reads the unaggregated
         # per-bucket rows directly, one shuffle instead of two
-        verdicts=rollup_verdicts(per_bucket, suite),
+        verdicts=rollup_verdicts(verdict_parts, suite),
         partition_verdicts=partition_verdicts.withColumn(
             "passed", suite_passed_expr(suite)
         ),

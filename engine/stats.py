@@ -17,6 +17,14 @@ partial+final agg model. Quantiles ride the t-digest path (engine/sketch.py).
 mean = sum/count and var = sum_sq/count - mean^2 are derived at finalize time;
 the two-pass-free formula trades a little numerical headroom for mergeability
 (acceptable for drift/validation; values are doubles).
+
+This is the one module that knows the partial format. ``validate()`` and
+``column_stats`` finalize their own scan's partials; the resumable runner
+(engine/checkpoint.py) stores each shard's merged partials as long lineage
+rows (``to_lineage``) and reads them back through the same merge and
+finalize (``lineage_stats``). So every entry point gives the same answer,
+also on an empty input: count, null_count and approx_ndv 0, and null for
+null_rate, min, max, mean and stddev.
 """
 
 from __future__ import annotations
@@ -30,9 +38,8 @@ _NUMERIC = (
     T.FloatType, T.DoubleType, T.DecimalType,
 )
 
-#: metrics emitted for every column / numeric-only
-BASE_METRICS = ("count", "null_count", "null_rate", "approx_ndv")
-NUMERIC_METRICS = ("min", "max", "mean", "stddev")
+#: each numeric partial and the aggregate that merges partials of it
+_NUMERIC_MERGE = {"min": "min", "max": "max", "sum": "sum", "sumsq": "sum"}
 
 
 def numeric_columns(df: DataFrame, columns: list[str]) -> list[str]:
@@ -50,9 +57,7 @@ def bucket_stat_exprs(df: DataFrame, columns: list[str]) -> list[Column]:
     nums = set(numeric_columns(df, columns))
     exprs: list[Column] = [F.expr("count(1) AS __rows")]
     for c in columns:
-        exprs.append(F.expr(
-            f"sum(CASE WHEN `{c}` IS NULL THEN 1 ELSE 0 END) AS `{c}__nulls`"
-        ))
+        exprs.append(F.expr(f"count(1) - count(`{c}`) AS `{c}__nulls`"))
         exprs.append(F.expr(
             f"hll_sketch_agg(CAST(`{c}` AS STRING)) AS `{c}__hll`"
         ))
@@ -68,17 +73,15 @@ def bucket_stat_exprs(df: DataFrame, columns: list[str]) -> list[Column]:
 
 
 def merge_bucket_stats(bucket_stats: DataFrame, columns: list[str], numeric: list[str]) -> DataFrame:
-    """Merge per-bucket partials into global partials (one row)."""
-    exprs: list[Column] = [F.expr("sum(`__rows`) AS `__rows`")]
+    """Merge per-bucket partials into global partials (one row; counts 0
+    when there are no buckets)."""
+    exprs: list[Column] = [F.expr("coalesce(sum(`__rows`), 0) AS `__rows`")]
     for c in columns:
-        exprs.append(F.expr(f"sum(`{c}__nulls`) AS `{c}__nulls`"))
+        exprs.append(F.expr(f"coalesce(sum(`{c}__nulls`), 0) AS `{c}__nulls`"))
         exprs.append(F.expr(f"hll_union_agg(`{c}__hll`) AS `{c}__hll`"))
         if c in numeric:
             exprs += [
-                F.expr(f"min(`{c}__min`) AS `{c}__min`"),
-                F.expr(f"max(`{c}__max`) AS `{c}__max`"),
-                F.expr(f"sum(`{c}__sum`) AS `{c}__sum`"),
-                F.expr(f"sum(`{c}__sumsq`) AS `{c}__sumsq`"),
+                F.expr(f"{agg}(`{c}__{m}`) AS `{c}__{m}`") for m, agg in _NUMERIC_MERGE.items()
             ]
     return bucket_stats.agg(*exprs)
 
@@ -88,7 +91,8 @@ def finalize_stats(global_stats: DataFrame, columns: list[str], numeric: list[st
 
     One ``F.expr`` string for the whole explode(array(named_struct...)) —
     the same Catalyst tree the old per-struct Column building produced, in
-    one py4j call instead of ~170 (see bucket_stat_exprs)."""
+    one py4j call instead of ~170 (see bucket_stat_exprs). Ratios over zero
+    rows are null (``try_divide``), not a division error."""
     structs: list[str] = []
 
     def metric(c: str, m: str, v: str) -> str:
@@ -103,24 +107,82 @@ def finalize_stats(global_stats: DataFrame, columns: list[str], numeric: list[st
         structs += [
             metric(c, "count", rows),
             metric(c, "null_count", nulls),
-            metric(c, "null_rate", f"{nulls} / {rows}"),
+            metric(c, "null_rate", f"try_divide({nulls}, {rows})"),
             metric(c, "approx_ndv", f"hll_sketch_estimate(`{c}__hll`)"),
         ]
         if c in numeric:
             n = f"({rows} - {nulls})"
-            mean = f"(`{c}__sum` / {n})"
-            var = f"greatest(`{c}__sumsq` / {n} - {mean} * {mean}, 0.0D)"
+            mean = f"try_divide(`{c}__sum`, {n})"
+            var = f"greatest(try_divide(`{c}__sumsq`, {n}) - {mean} * {mean}, 0.0D)"
             structs += [
                 metric(c, "min", f"`{c}__min`"),
                 metric(c, "max", f"`{c}__max`"),
                 metric(c, "mean", mean),
-                metric(c, "stddev", f"sqrt({var})"),
+                metric(c, "stddev", f"CASE WHEN {n} > 0 THEN sqrt({var}) END"),
             ]
     return (
         global_stats.select(
             F.expr(f"explode(array({', '.join(structs)})) AS s")
         ).select("s.column_name", "s.metric", "s.value")
     )
+
+
+def to_lineage(bucket_stats: DataFrame, columns: list[str], numeric: list[str]) -> DataFrame:
+    """The global partials of ``bucket_stats`` as long lineage rows
+    ``(column_name, metric, value, hll)``: per column ``rows``, ``nulls``,
+    ``hll`` (the sketch, in ``hll``) and for numeric columns ``min``,
+    ``max``, ``sum`` and ``sumsq``."""
+    structs: list[str] = []
+
+    def row(c: str, m: str, value: str = "NULL", hll: str = "NULL") -> str:
+        return (
+            f"named_struct('column_name', '{c}', 'metric', '{m}', "
+            f"'value', CAST({value} AS DOUBLE), 'hll', CAST({hll} AS BINARY))"
+        )
+
+    for c in columns:
+        structs += [
+            row(c, "rows", "`__rows`"),
+            row(c, "nulls", f"`{c}__nulls`"),
+            row(c, "hll", hll=f"`{c}__hll`"),
+        ]
+        if c in numeric:
+            structs += [row(c, m, f"`{c}__{m}`") for m in _NUMERIC_MERGE]
+    wide = merge_bucket_stats(bucket_stats, columns, numeric)
+    return wide.select(F.expr(f"inline(array({', '.join(structs)}))"))
+
+
+def lineage_stats(lineage: DataFrame) -> DataFrame:
+    """Global ``(column_name, metric, value)`` stats from the lineage rows of
+    any number of parts (``to_lineage`` output), through the same
+    ``merge_bucket_stats`` -> ``finalize_stats`` as the one-scan path: each
+    lineage row becomes a wide partial row holding its one field, and the
+    merge's aggregates skip the nulls. A column is numeric when it has
+    ``min`` rows; a part's row count is its first column's ``rows``."""
+    layout = (
+        lineage.groupBy("column_name")
+        .agg(F.expr("bool_or(metric = 'min') AS numeric"))
+        .orderBy("column_name")
+        .collect()
+    )
+    if not layout:
+        return lineage.select("column_name", "metric", "value").filter(F.lit(False))
+    columns = [r["column_name"] for r in layout]
+    numeric = [r["column_name"] for r in layout if r["numeric"]]
+
+    def pick(c: str, m: str, field: str = "value") -> str:
+        return f"CASE WHEN column_name = '{c}' AND metric = '{m}' THEN {field} END"
+
+    exprs = [f"{pick(columns[0], 'rows')} AS `__rows`"]
+    for c in columns:
+        exprs += [
+            f"{pick(c, 'nulls')} AS `{c}__nulls`",
+            f"{pick(c, 'hll', 'hll')} AS `{c}__hll`",
+        ]
+        if c in numeric:
+            exprs += [f"{pick(c, m)} AS `{c}__{m}`" for m in _NUMERIC_MERGE]
+    wide = merge_bucket_stats(lineage.selectExpr(*exprs), columns, numeric)
+    return finalize_stats(wide, columns, numeric)
 
 
 def column_stats(df: DataFrame, columns: list[str] | None = None) -> DataFrame:

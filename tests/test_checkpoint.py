@@ -328,3 +328,80 @@ def test_run_releases_cached_frames(spark, small_tables, tmp_path):
         refs={"transcripts": transcripts}, run_id="c", n_shards=2,
     ).collect()
     assert cache.numCachedEntries() == before
+
+
+def _stat_map(df):
+    return {(r["column_name"], r["metric"]): r["value"] for r in df.collect()}
+
+
+@pytest.mark.parametrize("rows", [
+    [("k0", 10, None, "flac"), ("k1", 20, None, None), ("k2", 20, None, "mp3")],
+    [],
+], ids=["all_null_numeric", "empty"])
+def test_stats_agree_across_entry_points(spark, tmp_path, rows):
+    """validate().stats, stats.column_stats and CheckpointedRunner.stats (4
+    shards, some empty) give the same stats, with one empty-input meaning:
+    count, null_count and approx_ndv 0, every ratio and moment null."""
+    import math
+
+    from engine import stats as stats_mod
+    from engine.runner import validate
+    from engine.suite import ConstraintSuite, NotNull
+
+    df = spark.createDataFrame(rows, "clip_id string, dur_ms int, score double, codec string")
+    cols = ["dur_ms", "score", "codec"]
+    suite = ConstraintSuite().add(NotNull("id_nn", column="clip_id"))
+    direct = _stat_map(stats_mod.column_stats(df, cols))
+    with validate(df, suite=suite, stat_columns=cols) as res:
+        batch = _stat_map(res.stats)
+    runner = CheckpointedRunner(spark, str(tmp_path / "ckpt"))
+    runner.run(df, suite, ["clip_id"], run_id="par", n_shards=4, stat_columns=cols)
+    assert any(r["rows_scanned"] == 0 for r in runner.lineage("par").collect())
+    sharded = _stat_map(runner.stats("par"))
+
+    for got in (batch, sharded):
+        assert set(got) == set(direct)
+        for k, want in direct.items():
+            a = got[k]
+            if a is None or want is None:
+                assert a == want, k
+            elif k[1] == "approx_ndv":
+                assert math.isclose(a, want, rel_tol=0.02), (k, a, want)
+            elif k[1] in ("mean", "stddev"):
+                assert math.isclose(a, want, rel_tol=1e-9), (k, a, want)
+            else:
+                assert a == want, k
+
+    n = float(len(rows))
+    assert direct[("score", "count")] == n and direct[("score", "null_count")] == n
+    assert direct[("score", "approx_ndv")] == 0.0
+    for m in ("min", "max", "mean", "stddev"):
+        assert direct[("score", m)] is None, m
+    if not rows:
+        for c in cols:
+            assert [direct[(c, m)] for m in ("count", "null_count", "approx_ndv")] == [0, 0, 0]
+            assert direct[(c, "null_rate")] is None
+        assert [direct[("dur_ms", m)] for m in ("min", "max", "mean", "stddev")] == [None] * 4
+
+
+def test_empty_input_verdicts(spark, small_tables, tmp_path):
+    """Every constraint of the full suite gets a (0, 0, passed) verdict on an
+    empty input, from validate and from the checkpoint runner alike; no
+    bucket was scanned, and a run with no finished shard reports nothing."""
+    from engine.runner import validate
+    from engine.suite import with_payload_checks
+
+    clips, transcripts = small_tables
+    empty = spark.createDataFrame([], clips.schema)
+    no_gold = spark.createDataFrame([], transcripts.schema)
+    suite = with_payload_checks(audio_clip_suite())
+    zero = {name: (0, 0, True) for name in suite.names()}
+    with validate(empty, no_gold, check_audio=True) as res:
+        assert _verdict_map(res.verdicts) == zero
+        assert res.partition_verdicts.count() == 0
+    runner = CheckpointedRunner(spark, str(tmp_path / "ckpt_empty"))
+    merged = runner.run(empty, suite, ["clip_id"], refs={"transcripts": no_gold},
+                        run_id="e", n_shards=3)
+    assert _verdict_map(merged) == zero
+    assert runner.done_shards("e") == {0, 1, 2}
+    assert runner.verdicts("never-run", suite=suite).count() == 0

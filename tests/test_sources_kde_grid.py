@@ -1,60 +1,14 @@
-"""Sources (§2.1), KDE log-density scoring (F11), grid evaluation (X1/X2)."""
+"""KDE log-density scoring (F11), grid evaluation (X1/X2)."""
 
 from __future__ import annotations
-
-import math
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from engine import sources, synth
+from engine import synth
 from engine.scoring import grid_evaluate, kde_fit_from_digest, kde_log_density, rolling_zscore
 from engine.sketch import TDigest
-
-
-def test_line_series_source(spark, tmp_path):
-    p = tmp_path / "series.txt"
-    vals = [1.5, -2.0, 3.25, 0.0, 9.5]
-    p.write_text("\n".join(str(v) for v in vals))
-    got = sources.read_line_series(spark, str(p)).orderBy("idx").collect()
-    assert [(r["idx"], r["value"]) for r in got] == list(enumerate(vals))
-
-
-def test_csv_series_source(spark, tmp_path):
-    p = tmp_path / "passengers.csv"
-    p.write_text("Month,Passengers\n1949-01,112\n1949-02,118\n1949-03,132\n")
-    got = sources.read_csv_series(spark, str(p), "Passengers").orderBy("idx").collect()
-    assert [r["value"] for r in got] == [112.0, 118.0, 132.0]
-
-
-def test_filename_metadata(spark, tmp_path):
-    d = tmp_path / "data_017_250_300.txt"
-    d.write_text("1.0\n2.0\n")
-    df = spark.read.text(str(d))
-    out = sources.filename_metadata(
-        df, r"data_(\d+)_(\d+)_(\d+)\.txt", ["file_id", "anom_start", "anom_stop"]
-    ).collect()
-    assert out[0]["file_id"] == "017"
-    assert out[0]["anom_start"] == "250"
-    assert out[0]["anom_stop"] == "300"
-
-
-def test_synthetic_sources(spark):
-    sb = sources.sine_bank(spark, n_series=3, length=100, period=20.0)
-    assert sb.count() == 300
-    r = sb.filter("series_id = 0 and idx = 10").collect()[0]
-    assert r["value"] == pytest.approx(math.sin(10 / 20.0))
-
-    nh = sources.noisy_two_harmonic(spark, 500, seed=42)
-    assert nh.count() == 500
-    vals = [r["value"] for r in nh.collect()]
-    assert max(abs(v) for v in vals) < 1.4
-
-    lr = sources.linear_ramp_hourly(spark, 10)
-    rows = lr.orderBy("idx").collect()
-    assert [r["value"] for r in rows] == [1.0 + 3 * i for i in range(10)]
-    assert (rows[1]["ts"] - rows[0]["ts"]).total_seconds() == 3600
 
 
 def test_kde_log_density_vs_numpy(spark):

@@ -501,3 +501,29 @@ def test_check_audio_without_transcripts_raises(fixture_tables):
     clips, _ = fixture_tables
     with pytest.raises(ValueError, match="transcripts"):
         validate(clips, None, check_audio=True)
+
+
+def test_payload_pass_survives_non_fixture_ids(spark):
+    """A valid WAV clip under a null id or an id that is not a fixture id
+    has no expected signal: that row fails pcm_snr_invariant with
+    ``no_expected_signal``, and the batch's fixture row keeps its pass."""
+    sr, dur = 16000, 1000
+    wav = synth.wav_bytes(synth.clean_pcm(7, sr, dur) * (32000 * 0.9), sr)
+    fixture_id = "clip_0000000007"
+    clips = spark.createDataFrame(
+        [(cid, wav, sr, dur, "pcm_s16le", "hello") for cid in (fixture_id, None, "studio-take-7")],
+        "clip_id string, bytes binary, sr_hz int, dur_ms int, codec string, transcript string",
+    ).coalesce(1)
+    transcripts = spark.createDataFrame(
+        [(fixture_id, "hello"), ("studio-take-7", "hello")],
+        "clip_id string, transcript_gold string",
+    )
+    with validate(clips, transcripts, check_audio=True) as res:
+        verdicts = {r["constraint"]: r["violation_count"] for r in res.verdicts.collect()}
+        bad = sorted(
+            (r["clip_id"] or "", r["offending_value"])
+            for r in res.violations["pcm_snr_invariant"].collect()
+        )
+    assert bad == [("", "no_expected_signal"), ("studio-take-7", "no_expected_signal")]
+    assert verdicts["pcm_snr_invariant"] == 2
+    assert verdicts["container_sr_consistency"] == 0
