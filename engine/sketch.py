@@ -1,24 +1,27 @@
-"""Mergeable t-digest + KS/PSI drift statistics on sketches.
+"""Mergeable t-digest for quantile thresholds, and categorical PSI.
 
 The reference fits its threshold state on the training distribution only
 (``anomaly_detection.py:453-456``: histogram at :347-350, KDE + q=0.99
 quantile at :371-373) and applies it to test scores (:458-463). At 10^12 rows
-the distribution itself can't be materialized, so this module carries it as a
-**t-digest** (Dunning & Ertl, "Computing extremely accurate quantiles using
-t-digests") — an associative, commutative, bounded-size sketch:
+the distribution itself can't be materialized, so the quantile-threshold
+callers (``scoring.fit_quantile_threshold(method='tdigest')`` and two corpus
+queries) carry it as a **t-digest** (Dunning & Ertl, "Computing extremely
+accurate quantiles using t-digests") — an associative, commutative,
+bounded-size sketch:
 
     per-partition build (vectorized numpy over Arrow batches)
-      -> merge (driver or treeAggregate combiner)
-      -> quantile / cdf queries -> KS statistic & PSI vs a baseline digest.
+      -> pid-ordered merge on the driver
+      -> quantile queries.
 
-Pure python/numpy (no external deps); serializes to bytes for storage in a
-baseline_stats snapshot table (FIXTURES.md §3).
+Pure python/numpy (no external deps); serializes to bytes. Drift
+(engine/drift.py) needs no sketch: it counts exactly against the baseline's
+percentile edges and shares only ``categorical_psi`` with this module.
 """
 
 from __future__ import annotations
 
 import struct
-from typing import Iterable, Iterator
+from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -121,15 +124,6 @@ class TDigest:
         t = (target - cum[i]) / (cum[i + 1] - cum[i])
         return float(self.means[i] + t * (self.means[i + 1] - self.means[i]))
 
-    def cdf(self, xs: np.ndarray) -> np.ndarray:
-        self.compress()
-        xs = np.asarray(xs, dtype=np.float64)
-        if not len(self.means):
-            return np.full(len(xs), np.nan)
-        n = self.weights.sum()
-        cum = np.cumsum(self.weights) - self.weights / 2.0
-        return np.interp(xs, self.means, cum / n, left=0.0, right=1.0)
-
     # -- serialization -----------------------------------------------------------
     def to_bytes(self) -> bytes:
         self.compress()
@@ -149,71 +143,9 @@ class TDigest:
 # distributed build: per-partition digests via Arrow batches, merged centrally
 # ---------------------------------------------------------------------------
 
-def build_digest(
-    df: DataFrame,
-    column: str,
-    compression: int = 200,
-    tree_combine: bool = False,
-    max_driver_partials: int = 1024,
-) -> TDigest:
-    """One scan: per-partition t-digests built from Arrow batches
-    (vectorized ``add``), merged associatively.
-
-    ``tree_combine=False``: flat driver merge — exact and fine up to ~10^4
-    partitions. ``tree_combine=True``: treeAggregate semantics — an
-    intermediate executor-side combine level (digests shuffled into
-    ~sqrt(n_partitions) groups, merged per group) before the driver merge, so
-    at 10^6-partition scale the driver only ever sees ~10^3 partials.
-
-    Determinism: digest merge order perturbs the centroids slightly, so every
-    level is keyed and ordered — each partial carries its source partition id,
-    the combine level groups on ``pmod(pid, fan_in)`` (not round-robin
-    ``repartition()``, which is retry-nondeterministic) and merges in pid
-    order, and the driver merges the combine outputs in group-key order.
-    Re-running the same input yields a bit-identical digest."""
-    col_df = df.select(F.col(column).cast("double").alias("v"))
-
-    def per_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        d = TDigest(compression)
-        for pdf in batches:
-            d.add(pdf["v"].to_numpy())
-        yield pd.DataFrame({"pid": [pid], "digest": [d.to_bytes()]})
-
-    partials = col_df.mapInPandas(per_partition, schema="pid long, digest binary")
-
-    if tree_combine:
-
-        def combine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            rows: list[tuple[int, bytes]] = []
-            for pdf in batches:
-                rows += [(int(p), bytes(b)) for p, b in zip(pdf["pid"], pdf["digest"])]
-            if not rows:
-                return
-            rows.sort(key=lambda r: r[0])
-            d = TDigest(compression)
-            for _, b in rows:
-                d.merge(TDigest.from_bytes(b))
-            yield pd.DataFrame({"pid": [rows[0][0]], "digest": [d.to_bytes()]})
-
-        # as many combine levels as needed (√n fan-in per level): 10^6
-        # partitions -> 10^3 -> driver; each level keyed + pid-ordered so the
-        # result stays bit-deterministic
-        n_parts = col_df.rdd.getNumPartitions()
-        while n_parts > max_driver_partials:
-            fan_in = max(int(n_parts ** 0.5), 1)
-            partials = partials.repartition(
-                fan_in, F.pmod(F.col("pid"), F.lit(fan_in))
-            ).mapInPandas(combine, schema="pid long, digest binary")
-            n_parts = fan_in
-
-    merged = sorted(partials.collect(), key=lambda r: r["pid"])
-    out = TDigest(compression)
-    for r in merged:
-        out.merge(TDigest.from_bytes(bytes(r["digest"])))
-    return out
+def build_digest(df: DataFrame, column: str, compression: int = 200) -> TDigest:
+    """One column's digest: ``build_digests`` for a single column."""
+    return build_digests(df, [column], compression)[column]
 
 
 def build_digests(df: DataFrame, columns: list[str], compression: int = 200) -> dict[str, TDigest]:
@@ -248,37 +180,8 @@ def build_digests(df: DataFrame, columns: list[str], compression: int = 200) -> 
 
 
 # ---------------------------------------------------------------------------
-# drift statistics on sketches
+# drift statistic on counts
 # ---------------------------------------------------------------------------
-
-def ks_statistic(a: TDigest, b: TDigest) -> float:
-    """Two-sample KS statistic approximated on the digests: max |F_a - F_b|
-    over the union of centroid locations."""
-    a.compress()
-    b.compress()
-    xs = np.union1d(a.means, b.means)
-    if not len(xs):
-        return 0.0
-    return float(np.max(np.abs(a.cdf(xs) - b.cdf(xs))))
-
-
-def psi(baseline: TDigest, current: TDigest, bins: int = 10, eps: float = 1e-6) -> float:
-    """Population Stability Index on ``bins`` equal-mass baseline buckets
-    (edges = baseline quantiles): sum (p_cur - p_base) * ln(p_cur / p_base)."""
-    edges = [baseline.quantile(i / bins) for i in range(1, bins)]
-    edges = np.unique(np.asarray(edges, dtype=np.float64))
-    if not len(edges):
-        return 0.0
-
-    def bucket_probs(d: TDigest) -> np.ndarray:
-        c = d.cdf(edges)
-        p = np.diff(np.concatenate([[0.0], c, [1.0]]))
-        return np.clip(p, eps, None)
-
-    p, q = bucket_probs(baseline), bucket_probs(current)
-    p, q = p / p.sum(), q / q.sum()
-    return float(np.sum((q - p) * np.log(q / p)))
-
 
 def categorical_psi(
     baseline_counts: dict[str, int], current_counts: dict[str, int], eps: float = 1e-6

@@ -12,7 +12,9 @@ the dominant cost, so this module fuses ALL per-column statistics into one
 
 so per-partition lineage stats and the global stats come from the SAME scan —
 partial aggregation map-side, final merge reduce-side, exactly Spark's
-partial+final agg model. Quantiles ride the t-digest path (engine/sketch.py).
+partial+final agg model. Quantiles are not among these stats: drift counts
+against percentile edges (engine/drift.py) and quantile thresholds use the
+t-digest (engine/sketch.py).
 
 mean = sum/count and var = sum_sq/count - mean^2 are derived at finalize time;
 the two-pass-free formula trades a little numerical headroom for mergeability

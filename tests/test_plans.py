@@ -172,3 +172,49 @@ def test_ri_on_uncovered_key_keeps_broadcast_antijoin(spark):
     p = plan_of(res.violations["l_partkey_ref_part"])
     assert "BroadcastHashJoin" in p and "LeftAnti" in p, p
     res.close()
+
+
+def _queries_in_group(spark, group: str, fn) -> tuple[list[int], list[str]]:
+    """Run ``fn`` under a job group; return the group's job ids and the
+    physical plan of every SQL query that ran one of them."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    # nothing else runs meanwhile, so the group's queries are the latest ones
+    store = spark._jsparkSession.sharedState().statusStore()
+    n = store.executionsCount()
+    execs = store.executionsList(max(n - 20, 0), 20)
+    plans = [execs.apply(i).physicalPlanDescription() for i in range(execs.size())
+             if any(execs.apply(i).jobs().contains(j) for j in jobs)]
+    return jobs, plans
+
+
+def test_drift_is_one_jvm_query_per_table(spark):
+    """drift_check counts the current table in ONE query with no Python
+    stage; fit_baseline reads the baseline in two (percentiles, then the
+    same counting query). Under AQE a query with one shuffle runs as two
+    jobs, its map stage and its result stage. The input is built without
+    Python, so any Python node in the plans is drift's own."""
+    from pyspark.sql import functions as F
+
+    from engine import drift
+
+    df = spark.range(0, 5_000, 1, 4).select(
+        (F.col("id") * 7919 % 1_000).cast("int").alias("dur_ms"),
+        F.when(F.col("id") % 3 == 0, 8000).otherwise(16000).alias("sr_hz"),
+        F.when(F.col("id") % 5 == 0, "flac").otherwise("pcm_s16le").alias("codec"),
+    )
+    fits = []
+    jobs, plans = _queries_in_group(spark, "drift-fit", lambda: fits.append(
+        drift.fit_baseline(df, ["dur_ms", "sr_hz"], ["codec"])))
+    assert (len(jobs), len(plans)) == (4, 2), (jobs, plans)
+    jobs, plans = _queries_in_group(spark, "drift-check",
+                                    lambda: drift.drift_check(df, fits[0]))
+    assert (len(jobs), len(plans)) == (2, 1), (jobs, plans)
+    for node in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython", "PythonUDF"):
+        assert node not in plans[0], plans[0]

@@ -1,14 +1,16 @@
-"""t-digest correctness (vs exact quantiles), merge invariance, KS/PSI drift
-detection on baseline-vs-drifted fixtures (SURVEY.md §7 hard-part 1)."""
+"""t-digest correctness (vs exact quantiles), merge invariance, and drift
+detection from exact counts on baseline-vs-drifted fixtures (SURVEY.md §7
+hard-part 1)."""
 
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from engine import drift, synth
-from engine.sketch import TDigest, build_digest, build_digests, categorical_psi, ks_statistic, psi
+from engine.sketch import TDigest, build_digest, categorical_psi
 
 RNG = np.random.default_rng(42)
 
@@ -54,14 +56,17 @@ def test_build_digest_distributed(spark):
         assert abs(d.quantile(q) - np.quantile(pdf["v"], q)) < 1.0
 
 
-def test_ks_and_psi_behave():
-    a = TDigest(200).add(RNG.normal(0, 1, 50_000))
-    b = TDigest(200).add(RNG.normal(0, 1, 50_000))
-    c = TDigest(200).add(RNG.normal(1.0, 1, 50_000))
-    assert ks_statistic(a, b) < 0.03
-    assert ks_statistic(a, c) > 0.3
-    assert psi(a, b) < 0.02
-    assert psi(a, c) > 0.5
+def test_drift_check_same_low_shifted_high(spark):
+    """A second sample of the baseline's distribution stays low on KS and
+    PSI; a one-sigma shift is high on both."""
+    def normal(seed: int, mean: float):
+        return spark.range(0, 50_000, 1, 4).select((F.randn(seed=seed) + mean).alias("v"))
+
+    b = drift.fit_baseline(normal(1, 0.0), ["v"])
+    same = drift.drift_check(normal(2, 0.0), b).set_index("metric")["value"]
+    shifted = drift.drift_check(normal(3, 1.0), b).set_index("metric")["value"]
+    assert same["ks"] < 0.03 and same["psi"] < 0.02, same
+    assert shifted["ks"] > 0.3 and shifted["psi"] > 0.5, shifted
 
 
 def test_categorical_psi():
@@ -94,6 +99,8 @@ def test_drift_check_end_to_end(spark):
         ),
     )
     rep2 = drift.drift_check(drifted, baseline)
+    # exact counts: a rerun gives a bit-identical report
+    pd.testing.assert_frame_equal(drift.drift_check(drifted, baseline), rep2)
     by = {(r.column_name, r.metric): r for r in rep2.itertuples()}
     assert not by[("dur_ms", "ks")].passed
     assert not by[("dur_ms", "psi")].passed
@@ -109,38 +116,68 @@ def test_baseline_save_load_roundtrip(spark, tmp_path):
     drift.save_baseline(spark, b, path)
     b2 = drift.load_baseline(spark, path)
     assert b2.snapshot_id == "baseline_v1"
-    assert b2.digests["dur_ms"].quantile(0.5) == pytest.approx(
-        b.digests["dur_ms"].quantile(0.5)
-    )
+    assert len(drift.edges(b.grids["dur_ms"])) > 50
+    assert drift.edges(b2.grids["dur_ms"]) == drift.edges(b.grids["dur_ms"])
+    assert b2.bucket_counts == b.bucket_counts
+    assert sum(b.bucket_counts["dur_ms"]) == b.n_rows == b2.n_rows
     assert b2.cat_counts == b.cat_counts
+    assert b2 == b
 
 
-def test_tree_combine_equals_flat(spark):
-    from pyspark.sql import functions as F
+def test_load_baseline_unknown_snapshot_raises(spark, tmp_path):
+    """An unknown snapshot id, or a file with no rows, must not load as an
+    empty baseline (which would check nothing and pass)."""
+    clips = synth.gen_clips(spark, 200, partitions=2)
+    path = str(tmp_path / "baseline_stats.parquet")
+    drift.save_baseline(spark, drift.fit_baseline(clips, ["dur_ms"], ["codec"]), path)
+    with pytest.raises(ValueError, match=r"'nope'.*baseline_v1"):
+        drift.load_baseline(spark, path, snapshot_id="nope")
+    empty = str(tmp_path / "empty.parquet")
+    spark.read.parquet(path).limit(0).write.parquet(empty)
+    with pytest.raises(ValueError, match="not found"):
+        drift.load_baseline(spark, empty)
 
-    from engine.sketch import build_digest
 
-    df = spark.range(0, 40_000, 1, 16).select((F.rand(seed=3) * 50).alias("v"))
-    flat = build_digest(df, "v")
-    # force real combine levels at test scale: 16 partials -> 4 -> 2 (two
-    # intermediate levels, the 10^6-partition shape in miniature)
-    tree = build_digest(df, "v", tree_combine=True, max_driver_partials=2)
-    assert tree.total_weight == flat.total_weight
-    for q in (0.05, 0.5, 0.95, 0.99):
-        assert abs(tree.quantile(q) - flat.quantile(q)) < 0.5
+def test_load_baseline_rejects_tdigest_format(spark, tmp_path):
+    """A baseline saved as t-digests (the format before the exact-count one)
+    is refused by name, never compared against counts."""
+    path = str(tmp_path / "old_baseline.parquet")
+    d = TDigest(200).add(RNG.normal(0, 1, 1_000))
+    spark.createDataFrame(
+        [("baseline_v1", "dur_ms", "numeric", d.to_bytes(), None, None, 1_000)],
+        "snapshot_id string, column_name string, kind string, tdigest binary, "
+        "categories array<string>, category_counts array<long>, n_rows long",
+    ).write.parquet(path)
+    with pytest.raises(ValueError, match="t-digest"):
+        drift.load_baseline(spark, path)
 
 
-def test_tree_combine_deterministic_across_reruns(spark):
-    """Digest merging is order-sensitive at the float level; the keyed,
-    pid-ordered combine must make tree-combined digests BIT-identical across
-    reruns of the same input (the engine-wide determinism rule)."""
+def test_drift_check_empty_and_all_null(spark):
+    """With no non-null value on either side a numeric column reports NaN,
+    not passed, for both KS and PSI; the other columns are unaffected."""
+    clips = synth.gen_clips(spark, 500, partitions=2).cache()
+    b = drift.fit_baseline(clips, ["dur_ms", "sr_hz"], ["codec"])
+    no_dur = clips.withColumn("dur_ms", F.lit(None).cast("int"))
+    for cur, nan_cols in ((clips.limit(0), {"dur_ms", "sr_hz"}), (no_dur, {"dur_ms"})):
+        rep = drift.drift_check(cur, b)
+        num = rep[rep["metric"].isin(["ks", "psi"])]
+        nan = num[num["column_name"].isin(nan_cols)]
+        assert len(nan) == 2 * len(nan_cols)
+        assert nan["value"].isna().all() and not nan["passed"].any(), rep
+        rest = num[~num["column_name"].isin(nan_cols)]
+        assert (rest["value"] == 0.0).all() and rest["passed"].all(), rep
+    all_null = drift.fit_baseline(no_dur, ["dur_ms"])
+    rep = drift.drift_check(clips, all_null)
+    assert rep["value"].isna().all() and not rep["passed"].any(), rep
+    clips.unpersist()
+
+
+def test_build_digest_deterministic_across_reruns(spark):
+    """Digest merging is order-sensitive at the float level; the pid-ordered
+    merge must make digests BIT-identical across reruns of the same input
+    (the engine-wide determinism rule)."""
     df = spark.range(0, 30_000, 1, 16).select((F.rand(seed=11) * 50).alias("v"))
-    a = build_digest(df, "v", tree_combine=True, max_driver_partials=2)
-    b = build_digest(df, "v", tree_combine=True, max_driver_partials=2)
-    assert a.to_bytes() == b.to_bytes()
-    c = build_digest(df, "v")
-    d = build_digest(df, "v")
-    assert c.to_bytes() == d.to_bytes()
+    assert build_digest(df, "v").to_bytes() == build_digest(df, "v").to_bytes()
 
 
 def test_sketch_quantile_threshold_vs_exact_sf001(spark, sf01_dir):
