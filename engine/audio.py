@@ -784,12 +784,10 @@ def with_transcript_ok(pcm: DataFrame, mismatched: DataFrame) -> DataFrame:
     clip_id and for the ``mismatched`` clip ids (the keys whose
     ``checks.key_groups`` transcript_ok is False — violations only, so the
     broadcast is small and the decode rows never shuffle)."""
-    bad = F.broadcast(mismatched.select("clip_id", F.lit(True).alias("__mismatch")))
-    return pcm.join(bad, "clip_id", "left").select(
+    bad = F.broadcast(mismatched.selectExpr("clip_id", "true AS __mismatch"))
+    return pcm.join(bad, "clip_id", "left").selectExpr(
         "clip_id", "bucket_id", "bytes_null", "pcm_ok", "meta_sr_ok", "snr_db",
-        (F.col("clip_id").isNotNull() & F.col("__mismatch").isNull()).alias(
-            "transcript_ok"
-        ),
+        "clip_id IS NOT NULL AND __mismatch IS NULL AS transcript_ok",
         "decode_error",
     )
 
@@ -814,7 +812,7 @@ def audio_invariants(
         clips, list(checks.GOLD_KEY),
         [transcripts.select("clip_id", "transcript_gold")], gold=True,
     )
-    mismatched = groups.filter(~F.col("transcript_ok")).select("clip_id")
+    mismatched = groups.filter("NOT transcript_ok").select("clip_id")
     pcm = payload_pass(clips, checks.bucket_expr(["clip_id"], 32), expected_fn, snr_min_db)
     return with_transcript_ok(pcm, mismatched)
 

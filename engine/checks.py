@@ -40,7 +40,22 @@ per-shard, per-micro-batch) rows become global verdicts through one roll-up,
 ``rollup_verdicts``, which every entry point shares.
 
 Violation DataFrames are returned lazily (un-materialized plans); callers
-decide whether to count, sample, or persist them.
+decide whether to count, sample, or persist them. Each persisted source —
+the violating keys of a key pass, the dangling rows of an anti-join, the
+payload rows — yields all its violation rows in ONE select (one per row
+shape: a Unique whose columns are not the run's key columns gets its own),
+and ``violations[name]`` of a cross-row or payload constraint is a filter
+of that select. So ``all_violations`` reads each persisted source once.
+
+Compiling costs driver round trips, not Spark jobs: ``run_suite`` starts
+none, but every Column method is a py4j call plus call-site bookkeeping.
+Engine-internal expressions therefore cross to the JVM as SQL text, one
+py4j call each (the ``engine/stats.py`` idiom); only the constraints' own
+``violation_expr`` Columns are built Column by Column, once per run. On the
+200-clip payload suite (``audio_clip_suite`` + payload checks, 8 buckets, no
+stat columns) a ``run_suite`` call went from 2,324 py4j call commands and
+56 DataFrame operations to 414 and 35 (``tests/test_plans.py`` pins at most
+800 calls).
 """
 
 from __future__ import annotations
@@ -86,26 +101,47 @@ class LazyFrames(dict):
         return [self[k] for k in list(super().keys())]
 
 
+def _ident(name: str) -> str:
+    """``name`` as a SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _text(s: str) -> str:
+    """``s`` as a SQL string literal."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _not_null(cols) -> str:
+    return " AND ".join(f"{_ident(c)} IS NOT NULL" for c in cols)
+
+
 def bucket_expr(key_cols: list[str], n_buckets: int) -> Column:
     """Deterministic logical-partition id: pmod(xxhash64(keys), n)."""
-    return F.pmod(F.xxhash64(*[F.col(c) for c in key_cols]), F.lit(n_buckets)).cast("int")
+    keys = ", ".join(_ident(c) for c in key_cols)
+    return F.expr(f"CAST(pmod(xxhash64({keys}), {int(n_buckets)}) AS INT)")
 
 
 def suite_passed_expr(suite: ConstraintSuite | None) -> Column:
     """pass/fail from (constraint, violation_count, rows_scanned) columns:
     NotNull honors its max_null_rate tolerance; everything else (and every
     constraint when ``suite`` is None) needs 0 violations."""
-    rate_entries = []
-    for c in suite.of_type(NotNull) if suite is not None else []:
-        rate_entries += [F.lit(c.name), F.lit(float(c.max_null_rate))]
-    allowed_rate = (
-        F.coalesce(F.create_map(*rate_entries)[F.col("constraint")], F.lit(0.0))
-        if rate_entries
-        else F.lit(0.0)
-    )
+    rates = [
+        f"{_text(c.name)}, {float(c.max_null_rate)!r}D"
+        for c in (suite.of_type(NotNull) if suite is not None else [])
+    ]
+    allowed = f"coalesce(map({', '.join(rates)})[constraint], 0.0D)" if rates else "0.0D"
+    return F.expr(f"(violation_count / greatest(rows_scanned, 1)) <= {allowed}")
+
+
+def _sum_parts(parts: DataFrame, keys: list[str], suite: ConstraintSuite | None) -> DataFrame:
     return (
-        F.col("violation_count") / F.greatest(F.col("rows_scanned"), F.lit(1))
-    ) <= allowed_rate
+        parts.groupBy(*keys)
+        .agg(
+            F.expr("CAST(sum(violation_count) AS BIGINT) AS violation_count"),
+            F.expr("CAST(sum(rows_scanned) AS BIGINT) AS rows_scanned"),
+        )
+        .withColumn("passed", suite_passed_expr(suite))
+    )
 
 
 def rollup_verdicts(parts: DataFrame, suite: ConstraintSuite | None) -> DataFrame:
@@ -113,48 +149,56 @@ def rollup_verdicts(parts: DataFrame, suite: ConstraintSuite | None) -> DataFram
     streamed micro-batches: sum per constraint, then ``suite_passed_expr``.
     The one roll-up every entry point uses, so a sharded, resumed or streamed
     run's flags provably match an uninterrupted batch run."""
-    return (
-        parts.groupBy("constraint")
-        .agg(
-            F.sum("violation_count").cast("long").alias("violation_count"),
-            F.sum("rows_scanned").cast("long").alias("rows_scanned"),
-        )
-        .withColumn("passed", suite_passed_expr(suite))
+    return _sum_parts(parts, ["constraint"], suite)
+
+
+def _violation_struct(cols: list[str], name: str, offending: str) -> str:
+    """SQL of one violation row: ``cols``, constraint, offending_value,
+    bucket_id — the column order of every violation DataFrame."""
+    fields = [f"{_text(c)}, {_ident(c)}" for c in cols] + [
+        f"'constraint', {_text(name)}",
+        f"'offending_value', {offending}",
+        f"'bucket_id', {BUCKET}",
+    ]
+    return f"named_struct({', '.join(fields)})"
+
+
+def _repeated_rows(df: DataFrame, rows: list[tuple[str, str]]) -> DataFrame:
+    """ONE select yielding, per row of ``df`` and ``(struct, n)`` pair of
+    ``rows``, ``n`` copies of the struct's row."""
+    arrays = ", ".join(f"array_repeat({s}, {n})" for s, n in rows)
+    return df.selectExpr(f"inline(concat({arrays}))")
+
+
+def _counts(df: DataFrame, counts: list[tuple[str, str]], rows_scanned: str = "0L") -> DataFrame:
+    """(bucket_id, constraint, violation_count, rows_scanned) rows: per row
+    of ``df``, one per ``(constraint, violation count SQL)`` of ``counts``."""
+    structs = ", ".join(
+        f"named_struct('constraint', {_text(name)}, "
+        f"'violation_count', CAST({n} AS BIGINT), 'rows_scanned', {rows_scanned})"
+        for name, n in counts
     )
+    return df.selectExpr(BUCKET, f"inline(array({structs}))")
 
 
-def _violation_expr(c, df: DataFrame) -> Column:
-    if isinstance(c, RowInvariant):
-        return c.violation_expr_for(df)
-    return c.violation_expr()
+def _offending(c) -> str:
+    col = getattr(c, "column", None)
+    return f"CAST({_ident(col)} AS STRING)" if col else "CAST(NULL AS STRING)"
 
 
 def row_local_violations_union(
-    fact: DataFrame, row_local: list, key_cols: list[str]
+    fact: DataFrame, row_local: list[tuple[str, Column, str]], key_cols: list[str]
 ) -> DataFrame:
-    """ALL row-local violation rows in ONE scan: per row, build an array of
-    (constraint, value) structs for the constraints it violates, filter out
-    nulls, explode. At 10^12 rows this replaces k per-constraint scans with
-    one — violations are rare, so the exploded output is tiny."""
+    """ALL row-local violation rows in ONE scan: per row, an array of the
+    violation rows of the constraints it violates, nulls dropped, inlined.
+    ``row_local`` holds (constraint name, violation Column, offending value
+    SQL). At 10^12 rows this replaces k per-constraint scans with one —
+    violations are rare, so the inlined output is tiny."""
     structs = [
-        F.when(
-            _violation_expr(c, fact),
-            F.struct(
-                F.lit(c.name).alias("constraint"),
-                (
-                    F.col(getattr(c, "column", None)).cast("string")
-                    if getattr(c, "column", None)
-                    else F.lit(None).cast("string")
-                ).alias("offending_value"),
-            ),
-        )
-        for c in row_local
+        F.when(cond, F.expr(_violation_struct(key_cols, name, offending)))
+        for name, cond, offending in row_local
     ]
-    hits = F.filter(F.array(*structs), lambda s: s.isNotNull())
-    return (
-        fact.select(*key_cols, F.col(BUCKET), F.explode(hits).alias("v"))
-        .select(*key_cols, "v.constraint", "v.offending_value", BUCKET)
-    )
+    return fact.select(F.inline(F.filter(F.array(*structs), lambda s: s.isNotNull())))
 
 
 @dataclass
@@ -198,17 +242,6 @@ class SuiteResult:
         self.close()
 
 
-def _count_if(cond: Column, alias: str) -> Column:
-    return F.sum(F.when(cond, 1).otherwise(0)).alias(alias)
-
-
-def _all_not_null(cols) -> Column:
-    cond = F.lit(True)
-    for c in cols:
-        cond = cond & F.col(c).isNotNull()
-    return cond
-
-
 def key_groups(
     fact: DataFrame,
     keys: list[str],
@@ -234,58 +267,38 @@ def key_groups(
     ``refs[i]`` carry ``keys`` under the fact's column names, with ``gold``
     ``refs[0]`` also ``transcript_gold``; ``fact`` carries ``keys`` (and
     ``transcript`` with ``gold``)."""
-    keys = list(keys)
-    no_str = F.lit(None).cast("string")
-    no_bucket = F.lit(None).cast("int")
+    cols = [_ident(k) for k in keys]
+    no_str = "CAST(NULL AS STRING)"
+    no_bucket = "CAST(NULL AS INT)"
 
-    def side(df: DataFrame, src: int, bucket: Column, t: Column, g: Column) -> DataFrame:
-        return df.filter(_all_not_null(keys)).select(
-            *keys, bucket.alias(BUCKET), F.lit(src).alias("__src"),
-            t.alias("__t"), g.alias("__g"),
+    def side(df: DataFrame, src: int, bucket: str, t: str, g: str) -> DataFrame:
+        return df.filter(_not_null(keys)).selectExpr(
+            *cols, f"{bucket} AS {BUCKET}", f"{src} AS __src", f"{t} AS __t", f"{g} AS __g",
         )
 
     union = side(
         fact, 0,
-        F.col(BUCKET) if BUCKET in fact.columns else no_bucket,
-        F.col("transcript") if gold else no_str,
+        BUCKET if BUCKET in fact.columns else no_bucket,
+        "transcript" if gold else no_str,
         no_str,
     )
     for i, ref in enumerate(refs):
         union = union.union(side(
             ref, i + 1, no_bucket, no_str,
-            F.col("transcript_gold") if gold and i == 0 else no_str,
+            "transcript_gold" if gold and i == 0 else no_str,
         ))
 
-    src = F.col("__src")
-    n_fact = F.count(F.when(src == 0, 1))
-    aggs = [n_fact.alias("n_fact"), F.min(BUCKET).alias(BUCKET)]
-    aggs += [F.bool_or(src == i + 1).alias(f"has_ref_{i}") for i in range(len(refs))]
+    n_fact = "count(CASE WHEN __src = 0 THEN 1 END)"
+    aggs = [f"{n_fact} AS n_fact", f"min({BUCKET}) AS {BUCKET}"]
+    aggs += [f"bool_or(__src = {i + 1}) AS has_ref_{i}" for i in range(len(refs))]
     if gold:
-        t, g = F.col("__t"), F.col("__g")
-        n_gold = F.count(F.when(src == 1, 1))
-        ok = (
-            (n_gold > 0)
-            & (F.count(t) == n_fact) & (F.count(g) == n_gold)
-            & (F.min(t) == F.max(t)) & (F.min(g) == F.max(g))
-            & (F.min(t) == F.min(g))
+        n_gold = "count(CASE WHEN __src = 1 THEN 1 END)"
+        aggs.append(
+            f"coalesce(({n_gold} > 0) AND (count(__t) = {n_fact}) AND (count(__g) = {n_gold})"
+            " AND (min(__t) = max(__t)) AND (min(__g) = max(__g)) AND (min(__t) = min(__g)),"
+            " false) AS transcript_ok"
         )
-        aggs.append(F.coalesce(ok, F.lit(False)).alias("transcript_ok"))
-    return union.groupBy(*keys).agg(*aggs).filter(F.col("n_fact") > 0)
-
-
-def _sparse_counts(df: DataFrame, counts: list[Column]) -> DataFrame:
-    """(bucket_id, constraint, violation_count, rows_scanned=0) rows from
-    ``(constraint, violation_count)`` structs over violating rows; the
-    bucket's rows_scanned comes from its zero row (see ``run_suite``)."""
-    return df.select(BUCKET, F.explode(F.array(*counts)).alias("v")).select(
-        BUCKET, "v.constraint",
-        F.col("v.violation_count").cast("long").alias("violation_count"),
-        F.lit(0).cast("long").alias("rows_scanned"),
-    )
-
-
-def _count_struct(name: str, n: Column) -> Column:
-    return F.struct(F.lit(name).alias("constraint"), n.alias("violation_count"))
+    return union.groupBy(*cols).agg(*[F.expr(a) for a in aggs]).filter("n_fact > 0")
 
 
 #: the key of the payload pass's transcript equality check
@@ -311,16 +324,23 @@ def run_suite(
     # into it so the fused scan never has to read `bytes`
     folded = [c for c in suite.of_type(NotNull) if c.column == "bytes"] if payload else []
     folded_names = {c.name for c in folded}
-    row_local = [c for c in suite.row_local() if c.name not in folded_names]
 
     bucket = bucket_expr(key_cols, n_buckets)
     fact = df.withColumn(BUCKET, bucket)
     persisted: list[DataFrame] = []
+    # each row-local constraint's violation Column, built once: the fused
+    # scan, the one-scan violation union and its own rows share it
+    row_local = [
+        (c.name,
+         c.violation_expr_for(fact) if isinstance(c, RowInvariant) else c.violation_expr(),
+         _offending(c))
+        for c in suite.row_local() if c.name not in folded_names
+    ]
 
     # ---- job 1: fused row-local checks + column stats, one scan -------------
     check_exprs = [
-        _count_if(_violation_expr(c, fact), f"__v__{i}")
-        for i, c in enumerate(row_local)
+        F.sum(F.when(cond, 1).otherwise(0)).alias(f"__v__{i}")
+        for i, (_, cond, _) in enumerate(row_local)
     ]
     stat_columns = stat_columns if stat_columns is not None else df.columns
     numeric = stats_mod.numeric_columns(df, stat_columns)
@@ -333,11 +353,7 @@ def run_suite(
 
     # global stats derived from the SAME scan's partials
     if stat_columns:
-        global_wide = stats_mod.merge_bucket_stats(
-            bucket_wide.drop(*[f"__v__{i}" for i in range(len(row_local))], BUCKET),
-            stat_columns,
-            numeric,
-        )
+        global_wide = stats_mod.merge_bucket_stats(bucket_wide, stat_columns, numeric)
         stats_long = stats_mod.finalize_stats(global_wide, stat_columns, numeric)
     else:
         stats_long = None
@@ -346,19 +362,25 @@ def run_suite(
 
     # violation row DataFrames for row-local constraints — stored as
     # factories (LazyFrames) so their plan analysis only runs if a caller
-    # actually asks for that constraint's rows
-    for c in row_local:
-        def _mk(c=c):
-            vexpr = _violation_expr(c, fact)
-            cols = [F.col(k) for k in key_cols] + [F.lit(c.name).alias("constraint")]
-            col_attr = getattr(c, "column", None)
-            if col_attr:
-                cols.append(F.col(col_attr).cast("string").alias("offending_value"))
-            else:
-                cols.append(F.lit(None).cast("string").alias("offending_value"))
-            return fact.filter(vexpr).select(*cols, F.col(BUCKET))
+    # actually asks for that constraint's rows; a filter of the fact table,
+    # so a parquet scan can push the predicate down
+    row_cols = [_ident(k) for k in key_cols]
+    for name, cond, offending in row_local:
+        violations[name] = lambda name=name, cond=cond, offending=offending: (
+            fact.filter(cond).selectExpr(
+                *row_cols, f"{_text(name)} AS constraint",
+                f"{offending} AS offending_value", BUCKET,
+            )
+        )
 
-        violations[c.name] = _mk
+    # every cross-row and payload violation source: one select each, and
+    # each of its constraints' rows a lazy filter of it
+    sources = []
+
+    def add_source(rows: DataFrame, names: list[str]) -> None:
+        sources.append(rows)
+        for name in names:
+            violations[name] = lambda name=name: rows.filter(f"constraint = {_text(name)}")
 
     # cross-row and payload constraints report sparse per-bucket rows (only
     # buckets holding violations, rows_scanned 0); every scanned bucket's row
@@ -399,80 +421,73 @@ def run_suite(
             if s not in ref_sources
         ]
         frames = [
-            refs[name].select(
-                *[F.col(rc).alias(fc) for fc, rc in zip(keys, rcols)],
+            refs[name].selectExpr(
+                *[f"{_ident(rc)} AS {_ident(fc)}" for fc, rc in zip(keys, rcols)],
                 *(["transcript_gold"] if g["gold"] and i == 0 else []),
             )
             for i, (name, rcols) in enumerate(ref_sources)
         ]
-        has_ref = {
-            r.name: F.col(f"has_ref_{ref_sources.index((r.ref_name, tuple(r.ref_columns)))}")
+        missing_ref = {
+            r.name: f"NOT has_ref_{ref_sources.index((r.ref_name, tuple(r.ref_columns)))}"
             for r in g["ris"]
         }
-        n_fact = F.col("n_fact")
-        bad_cond = F.lit(False)
-        if g["uniques"]:
-            bad_cond = bad_cond | (n_fact > 1)
-        for ok in has_ref.values():
-            bad_cond = bad_cond | ~ok
+        bad_cond = (["n_fact > 1"] if g["uniques"] else []) + list(missing_ref.values())
         if g["gold"]:
-            bad_cond = bad_cond | ~F.col("transcript_ok")
+            bad_cond.append("NOT transcript_ok")
         # the violating keys only: tiny, and feeding the verdicts, the
         # violation rows and (broadcast) the payload pass
-        bad = key_groups(
-            fact, keys, frames, gold=g["gold"]
-        ).filter(bad_cond).persist()
+        bad = key_groups(fact, keys, frames, gold=g["gold"]).filter(" OR ".join(bad_cond))
+        bad = bad.persist()
         persisted.append(bad)
 
+        # violation rows by row shape: a Unique's rows carry its columns, an
+        # RI's one row per dangling FACT row carries key_cols
+        shapes: dict[tuple, list] = {}
         counts = []
         for u in g["uniques"]:
-            violations[u.name] = bad.filter(n_fact > 1).select(
-                *keys,
-                F.lit(u.name).alias("constraint"),
-                n_fact.cast("string").alias("offending_value"),
-                F.col(BUCKET),
-            )
+            shapes.setdefault(tuple(keys), []).append((u.name, _violation_struct(
+                keys, u.name, "CAST(n_fact AS STRING)"), "CASE WHEN n_fact > 1 THEN 1 ELSE 0 END"))
             # violation_count = excess rows (rows that would be dropped by dedup)
-            counts.append(_count_struct(u.name, F.when(n_fact > 1, n_fact - 1).otherwise(0)))
+            counts.append((u.name, "CASE WHEN n_fact > 1 THEN n_fact - 1 ELSE 0 END"))
         for r in g["ris"]:
-            ok = has_ref[r.name]
-            # one violation row per dangling FACT row
-            violations[r.name] = bad.filter(~ok).select(
-                *key_cols,
-                F.lit(r.name).alias("constraint"),
-                F.col(r.columns[0]).cast("string").alias("offending_value"),
-                F.col(BUCKET),
-                F.explode(F.array_repeat(F.lit(0), n_fact.cast("int"))).alias("__row"),
-            ).drop("__row")
-            counts.append(_count_struct(r.name, F.when(~ok, n_fact).otherwise(0)))
+            miss = missing_ref[r.name]
+            shapes.setdefault(tuple(key_cols), []).append((r.name, _violation_struct(
+                key_cols, r.name, f"CAST({_ident(r.columns[0])} AS STRING)"),
+                f"CASE WHEN {miss} THEN CAST(n_fact AS INT) ELSE 0 END"))
+            counts.append((r.name, f"CASE WHEN {miss} THEN n_fact ELSE 0 END"))
+        for entries in shapes.values():
+            add_source(_repeated_rows(bad, [(s, n) for _, s, n in entries]),
+                       [name for name, _, _ in entries])
         if counts:
-            sparse.append(_sparse_counts(bad, counts))
+            sparse.append(_counts(bad, counts))
         if g["gold"]:
-            mismatched = bad.filter(~F.col("transcript_ok")).select(*GOLD_KEY)
+            mismatched = bad.filter("NOT transcript_ok").select(*GOLD_KEY)
 
     # ---- job 3: RefIntegrity on a key no Unique covers (anti-join) ----------
+    # here and in the payload pass every violation row counts 1, so the
+    # sparse counts are a projection of the source's one select
+    one_per_row = [BUCKET, "constraint", "1L AS violation_count", "0L AS rows_scanned"]
     for c in anti_ris:
-        ref_keys = F.broadcast(refs[c.ref_name].select(
-            *[F.col(rc).alias(fc) for fc, rc in zip(c.columns, c.ref_columns)]
+        ref_keys = F.broadcast(refs[c.ref_name].selectExpr(
+            *[f"{_ident(rc)} AS {_ident(fc)}" for fc, rc in zip(c.columns, c.ref_columns)]
         ).dropDuplicates(list(c.columns)))
         # tiny output feeding two actions — persist like the key pass above
         # so the anti-join's full-table probe runs once, not once per action
         dangling = (
-            fact.filter(_all_not_null(c.columns))
+            fact.filter(_not_null(c.columns))
             .join(ref_keys, on=list(c.columns), how="left_anti")
             .persist()
         )
         persisted.append(dangling)
-        violations[c.name] = dangling.select(
-            *key_cols,
-            F.lit(c.name).alias("constraint"),
-            F.col(c.columns[0]).cast("string").alias("offending_value"),
-            F.col(BUCKET),
+        rows = dangling.selectExpr(
+            *row_cols, f"{_text(c.name)} AS constraint",
+            f"CAST({_ident(c.columns[0])} AS STRING) AS offending_value", BUCKET,
         )
-        sparse.append(_sparse_counts(dangling, [_count_struct(c.name, F.lit(1))]))
+        add_source(rows, [c.name])
+        sparse.append(rows.selectExpr(*one_per_row))
 
     # ---- job 4: payload checks (one Arrow-UDF decode pass) ------------------
-    flags = [(c.flag, c.name) for c in payload]
+    failed = [(f"NOT {_ident(c.flag)}", c.name) for c in payload]
     if payload:
         from engine import audio as audio_mod
 
@@ -485,42 +500,26 @@ def run_suite(
             inv = audio_mod.with_transcript_ok(inv, mismatched)
         inv = inv.persist()
         persisted.append(inv)
-        if folded:
-            inv = inv.withColumn("bytes_ok", ~F.col("bytes_null"))
-            flags += [("bytes_ok", c.name) for c in folded]
-        for flag, name in flags:
-            violations[name] = inv.filter(~F.col(flag)).select(
-                "clip_id",
-                F.lit(name).alias("constraint"),
-                F.coalesce(F.col("decode_error"), F.col("snr_db").cast("string")).alias(
-                    "offending_value"
-                ),
-                F.col(BUCKET),
-            )
-        any_bad = F.lit(False)
-        for flag, _ in flags:
-            any_bad = any_bad | ~F.col(flag)
-        sparse.append(_sparse_counts(inv.filter(any_bad), [
-            _count_struct(name, F.when(~F.col(flag), 1).otherwise(0)) for flag, name in flags
-        ]))
+        failed += [("bytes_null", c.name) for c in folded]
+        offending = "coalesce(decode_error, CAST(snr_db AS STRING))"
+        rows = _repeated_rows(inv, [
+            (_violation_struct(["clip_id"], name, offending),
+             f"CASE WHEN {cond} THEN 1 ELSE 0 END")
+            for cond, name in failed
+        ])
+        add_source(rows, [name for _, name in failed])
+        sparse.append(rows.selectExpr(*one_per_row))
 
     # ---- the one roll-up: every scanned bucket gets a row per constraint ----
-    zero_names = [c.name for c in uniques + ris] + [name for _, name in flags]
-    per_bucket = bucket_wide.select(
-        BUCKET,
-        F.col("__rows").cast("long").alias("rows_scanned"),
-        F.explode(F.array(
-            *[_count_struct(c.name, F.col(f"__v__{i}").cast("long"))
-              for i, c in enumerate(row_local)],
-            *[_count_struct(n, F.lit(0).cast("long")) for n in zero_names],
-        )).alias("v"),
-    ).select(BUCKET, "v.constraint", "v.violation_count", "rows_scanned")
-    for s in sparse:
-        per_bucket = per_bucket.unionByName(s)
-    partition_verdicts = per_bucket.groupBy(BUCKET, "constraint").agg(
-        F.sum("violation_count").cast("long").alias("violation_count"),
-        F.sum("rows_scanned").cast("long").alias("rows_scanned"),
+    zero_names = [c.name for c in uniques + ris] + [name for _, name in failed]
+    per_bucket = _counts(
+        bucket_wide,
+        [(name, f"__v__{i}") for i, (name, _, _) in enumerate(row_local)]
+        + [(name, "0") for name in zero_names],
+        rows_scanned="CAST(__rows AS BIGINT)",
     )
+    for s in sparse:
+        per_bucket = per_bucket.union(s)
 
     # one union of every violation source -> materializing the full violation
     # set is ONE action (vs one job per constraint). Row-local rows come from
@@ -529,9 +528,8 @@ def run_suite(
     violations_union = (
         row_local_violations_union(fact, row_local, key_cols) if row_local else None
     )
-    fused_names = {c.name for c in row_local}
-    sources = [violations_union] if violations_union is not None else []
-    sources += [violations[n] for n in list(violations.keys()) if n not in fused_names]
+    if violations_union is not None:
+        sources.insert(0, violations_union)
     all_violations = sources[0] if sources else None
     for s in sources[1:]:
         all_violations = all_violations.unionByName(s, allowMissingColumns=True)
@@ -549,9 +547,7 @@ def run_suite(
         # sums are associative: the global roll-up reads the unaggregated
         # per-bucket rows directly, one shuffle instead of two
         verdicts=rollup_verdicts(verdict_parts, suite),
-        partition_verdicts=partition_verdicts.withColumn(
-            "passed", suite_passed_expr(suite)
-        ),
+        partition_verdicts=_sum_parts(per_bucket, [BUCKET, "constraint"], suite),
         violations=violations,
         stats=stats_long,
         bucket_stats=bucket_wide,

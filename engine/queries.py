@@ -1553,9 +1553,12 @@ def drift_report_clips(spark: SparkSession, sf_dir: str) -> DataFrame:
     from engine import drift, synth
 
     clips = synth.gen_clips(spark, 2000, partitions=8).cache()
-    baseline = drift.fit_baseline(clips, ["dur_ms", "sr_hz"], ["codec"])
-    drifted = clips.withColumn("dur_ms", (F.col("dur_ms") * 1.25).cast("int"))
-    rep = drift.drift_check(drifted, baseline)  # thresholds: ks/psi <= 0.1
+    try:
+        baseline = drift.fit_baseline(clips, ["dur_ms", "sr_hz"], ["codec"])
+        drifted = clips.withColumn("dur_ms", (F.col("dur_ms") * 1.25).cast("int"))
+        rep = drift.drift_check(drifted, baseline)  # thresholds: ks/psi <= 0.1
+    finally:
+        clips.unpersist()
     in_domain = F.when(
         F.col("metric") == "ks", (F.col("value") >= 0) & (F.col("value") <= 1)
     ).otherwise(F.col("value") >= 0)
@@ -1584,9 +1587,6 @@ def drift_sketch_accuracy_clips(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     clips = synth.gen_clips(spark, 2000, partitions=8).cache()
     drifted = clips.withColumn("dur_ms", (F.col("dur_ms") * 1.25).cast("int"))
-    baseline = drift.fit_baseline(clips, ["dur_ms", "sr_hz"], [])
-    rep = drift.drift_check(drifted, baseline)
-    reported_ks = rep[rep["metric"] == "ks"].set_index("column_name")["value"]
 
     def exact_ks(col: str) -> float:
         a = clips.select(F.col(col).cast("double").alias("v"), F.lit(1).alias("is_a"))
@@ -1606,8 +1606,14 @@ def drift_sketch_accuracy_clips(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return ecdf.agg(F.max(F.abs(F.col("d")))).collect()[0][0]
 
-    rows = [(col, bool(abs(reported_ks[col] - exact_ks(col)) <= 0.05))
-            for col in ("dur_ms", "sr_hz")]
+    try:
+        baseline = drift.fit_baseline(clips, ["dur_ms", "sr_hz"], [])
+        rep = drift.drift_check(drifted, baseline)
+        reported_ks = rep[rep["metric"] == "ks"].set_index("column_name")["value"]
+        rows = [(col, bool(abs(reported_ks[col] - exact_ks(col)) <= 0.05))
+                for col in ("dur_ms", "sr_hz")]
+    finally:
+        clips.unpersist()
     return spark.createDataFrame(rows, "column_name string, ks_within_tolerance boolean")
 
 

@@ -9,6 +9,7 @@ from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from engine import audio, checks
 from engine.suite import (
@@ -130,6 +131,47 @@ def test_key_pass_matches_oracle(spark, tables, n_buckets):
         assert res.all_violations.count() == (
             len(unique) + sum(dangling.values()) + sum(failed.values())
         )
+        _assert_union_of_constraint_rows(res, _suite().names(), T.StructType([
+            T.StructField("clip_id", T.StringType()),
+            T.StructField("constraint", T.StringType(), False),
+            T.StructField("offending_value", T.StringType()),
+            T.StructField("bucket_id", T.IntegerType()),
+        ]))
+
+
+def _assert_union_of_constraint_rows(res, names, schema):
+    """``all_violations`` is, as a multiset of rows, the union of
+    ``violations[name]`` over every constraint, with ``schema`` (columns a
+    constraint's rows lack are null)."""
+    assert res.all_violations.schema == schema
+    cols = res.all_violations.columns
+
+    def rows(df):
+        return Counter(tuple(r.asDict().get(c) for c in cols) for r in df.collect())
+
+    per_constraint = Counter()
+    for name in names:
+        per_constraint.update(rows(res.violations[name]))
+    assert rows(res.all_violations) == per_constraint
+
+
+def test_lineitem_all_violations_is_union_of_constraint_rows(spark, sf01_dir):
+    """Unique rows carry (l_orderkey, l_linenumber), the row-local and
+    anti-join RefIntegrity rows only the key column l_orderkey."""
+    from engine import queries
+
+    li = spark.read.parquet(f"{sf01_dir}/lineitem.parquet")
+    part = spark.read.parquet(f"{sf01_dir}/part.parquet")
+    suite = queries.lineitem_suite()
+    with checks.run_suite(li, suite, key_cols=["l_orderkey"], refs={"part": part},
+                          n_buckets=8, stat_columns=[]) as res:
+        _assert_union_of_constraint_rows(res, suite.names(), T.StructType([
+            T.StructField("l_orderkey", T.LongType()),
+            T.StructField("constraint", T.StringType()),
+            T.StructField("offending_value", T.StringType()),
+            T.StructField("bucket_id", T.IntegerType()),
+            T.StructField("l_linenumber", T.IntegerType()),
+        ]))
 
 
 def test_audio_invariants_transcript_ok_matches_oracle(tables):

@@ -218,3 +218,48 @@ def test_drift_is_one_jvm_query_per_table(spark):
     assert (len(jobs), len(plans)) == (2, 1), (jobs, plans)
     for node in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython", "PythonUDF"):
         assert node not in plans[0], plans[0]
+
+
+def _count_nodes(plan, name: str) -> int:
+    """Nodes called ``name`` in a physical plan tree, walking AQE's current
+    plan; the cached plan behind an InMemoryTableScan is not walked."""
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    children = plan.children()
+    return (plan.nodeName() == name) + sum(
+        _count_nodes(children.apply(i), name) for i in range(children.size()))
+
+
+def test_suite_compile_round_trips_and_one_read_per_cached_source(spark):
+    """Compiling the payload suite starts no Spark job and stays within a
+    budget of py4j call commands (engine-internal expressions cross as SQL
+    text, not Column by Column); ``all_violations`` reads the persisted
+    violating keys once and the persisted payload rows once."""
+    from engine import checks, synth
+    from engine.suite import audio_clip_suite, with_payload_checks
+
+    clips = synth.gen_clips(spark, 200, partitions=2)
+    transcripts = synth.gen_transcripts(spark, 200, partitions=2)
+    client = spark.sparkContext._gateway._gateway_client
+    send, calls, out = client.send_command, [], []
+
+    def counting_send(command, *args, **kwargs):
+        if command.startswith("c\n"):  # py4j's call command
+            calls.append(command)
+        return send(command, *args, **kwargs)
+
+    def compile_suite():
+        client.send_command = counting_send
+        try:
+            out.append(checks.run_suite(
+                clips, with_payload_checks(audio_clip_suite()), ["clip_id"],
+                refs={"transcripts": transcripts}, n_buckets=8, stat_columns=[]))
+        finally:
+            client.send_command = send
+
+    jobs, _ = _queries_in_group(spark, "suite-compile", compile_suite)
+    assert jobs == []
+    assert len(calls) <= 800, len(calls)
+    with out[0] as res:
+        plan = res.all_violations._jdf.queryExecution().executedPlan()
+        assert _count_nodes(plan, "InMemoryTableScan") == 2, plan.toString()

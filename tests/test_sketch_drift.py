@@ -172,6 +172,18 @@ def test_drift_check_empty_and_all_null(spark):
     clips.unpersist()
 
 
+def test_drift_queries_release_their_cached_clips(spark):
+    """The two drift queries cache their clips for the fit, the check and
+    the exact KS, and release them once the driver-side report is built:
+    the session holds no more persisted RDDs than before."""
+    from engine import queries
+
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = persistent().size()
+    queries.drift_report_clips(spark, "").collect()
+    queries.drift_sketch_accuracy_clips(spark, "").collect()
+    assert persistent().size() == before
+
 def test_build_digest_deterministic_across_reruns(spark):
     """Digest merging is order-sensitive at the float level; the pid-ordered
     merge must make digests BIT-identical across reruns of the same input
